@@ -78,6 +78,19 @@ object Bench {
     */
   private def jnum3(v: Double): String = f"$v%.3f"
 
+  /** The session's core count from `SPARK_GRAFT_CPUS`: unset is 4,
+    * `*` is every available processor, and anything else must be a
+    * positive integer — a typo fails loudly instead of silently sizing
+    * the session for 4 cores.
+    */
+  def resolveCpus(v: Option[String]): Int = v match {
+    case None => 4
+    case Some("*") => Runtime.getRuntime.availableProcessors()
+    case Some(s) => s.toIntOption.filter(_ >= 1).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer or *, got '$s'"))
+  }
+
   def main(args: Array[String]): Unit = {
     val rc = run(k => sys.env.get(k))
     if (rc != 0) sys.exit(rc)
@@ -93,7 +106,7 @@ object Bench {
     val t0All = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - t0All) / 1e9
     val sfDir = env("SPARK_GRAFT_SF_DIR").getOrElse("/root/testdata/sf0.1")
-    val cpus = env("SPARK_GRAFT_CPUS").getOrElse("4")
+    val cpus = resolveCpus(env("SPARK_GRAFT_CPUS"))
     val outFile = env("SPARK_GRAFT_BENCH_OUT").getOrElse("bench.json")
     // default 2 passes (r15, was 3): the 215-line default set cannot
     // do 3 passes + retries + sidecar inside the 900 s budget, so the
@@ -117,13 +130,13 @@ object Bench {
     // conf — applied at session build; env-overridable for sweeps.
     val advisory = env("SPARK_GRAFT_ADVISORY_PART").getOrElse(
       graft.util.SessionDefaults.advisoryPartitionBytes(
-        cpus.toIntOption.getOrElse(4)).toString)
+        cpus).toString)
     val cgCache = env("SPARK_GRAFT_CODEGEN_CACHE").getOrElse(
       graft.util.SessionDefaults.codegenCacheEntries(
         SparkEntry.queries.size).toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory)
       .config(graft.util.SessionDefaults.CodegenCacheKey, cgCache)
       .config("spark.ui.enabled", "false")

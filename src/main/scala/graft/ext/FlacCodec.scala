@@ -42,7 +42,6 @@ object FlacCodec {
     private var pos = startByte
     private var bit = 0
     def bytePos: Int = pos
-    def bitAligned: Boolean = bit == 0
     def readBit(): Int = {
       if (pos >= bytes.length)
         throw new java.util.NoSuchElementException("flac: EOF")

@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sink.ParquetMerge
+import graft.util.StateFold
 
 /** Incremental maintenance of the persisted ANN index artifacts — the
   * [[graft.pipeline.IncrementalCuration]] state-fold pattern applied
@@ -77,9 +77,7 @@ object IncrementalAnn {
   def ivfInit(spark: SparkSession, dir: String, base: DataFrame,
               id: String, vec: String, nLists: Int = 16,
               seed: Long = 42L): Unit = {
-    val centPath = new org.apache.hadoop.fs.Path(dir + CentroidsSuffix)
-    if (centPath.getFileSystem(spark.sessionState.newHadoopConf())
-      .exists(centPath)) {
+    if (StateFold.exists(spark, dir + CentroidsSuffix)) {
       val cent = spark.read.parquet(dir + CentroidsSuffix)
       val buildMean = cent.select("build_mean_dist").head().getDouble(0)
       foldAssigned(spark, dir,
@@ -142,54 +140,36 @@ object IncrementalAnn {
 
   private def foldAssigned(spark: SparkSession, dir: String,
                            assigned: DataFrame, id: String, vec: String,
-                           batchNo: Long, buildMean: Double): Unit = {
-    graft.util.StateConf.bind(spark, dir, StateParts)
-    val rows = assigned
-      .withColumn("part", pmod(col(id), lit(StateParts.toLong)))
-      .withColumn("ver", lit(batchNo))
-      .select(Seq("part", id, "ver", "ivf_list", "adist", vec).map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stats = rows.agg(count(lit(1)), avg(col("adist"))).head()
-    ParquetMerge.upsertPartitions(spark, dir, rows, "part", id, "ver")
-    // one audit row per batch, LWW-keyed by batchNo: a replayed batch
-    // REWRITES its row (an append-only audit would double-count —
-    // the df-summary lesson); drift_ratio ≫ 1 is the re-train trigger
-    import spark.implicits._
-    val meanD = if (stats.isNullAt(1)) 0.0 else stats.getDouble(1)
-    val audit = Seq((0L, batchNo, batchNo, stats.getLong(0), meanD,
-      buildMean, if (buildMean > 0) meanD / buildMean else 0.0))
-      .toDF("part", "batch_no", "ver", "n_rows", "mean_dist",
-        "build_mean_dist", "drift_ratio")
-    ParquetMerge.upsertPartitions(spark, dir + AuditSuffix, audit,
-      "part", "batch_no", "ver")
-    rows.unpersist()
-    // exit-side bind: the first fold of a fresh root records its layout
-    graft.util.StateConf.bind(spark, dir, StateParts)
-  }
+                           batchNo: Long, buildMean: Double): Unit =
+    StateFold.bound(spark, dir, StateParts) {
+      val rows = StateFold.stamp(assigned, idPart(col(id)), col(id),
+          batchNo, "ivf_list", "adist", vec)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val stats = rows.agg(count(lit(1)), avg(col("adist"))).head()
+      StateFold.upsert(spark, dir, rows, key = id)
+      // one audit row per batch, LWW-keyed by batchNo: a replayed batch
+      // REWRITES its row (an append-only audit would double-count —
+      // the df-summary lesson); drift_ratio ≫ 1 is the re-train trigger
+      val meanD = if (stats.isNullAt(1)) 0.0 else stats.getDouble(1)
+      auditRow(spark, dir, batchNo, batchNo, stats.getLong(0), meanD,
+        buildMean, if (buildMean > 0) meanD / buildMean else 0.0)
+      rows.unpersist()
+    }
 
-  /** The streaming face of the IVF fold: each micro-batch of new
-    * embeddings folds against the frozen centroids via foreachBatch —
-    * batchId+1 becomes the merge version (0 is reserved for the init
-    * fold), so an at-least-once replayed micro-batch re-merges
-    * idempotently: checkpoint + the LWW merge = effective
-    * exactly-once, the same contract as
-    * [[graft.pipeline.IncrementalCuration.curateStream]]. The drift
-    * audit row per micro-batch makes the re-train trigger observable
-    * ON the stream (alert on drift_ratio from the audit table).
-    */
-  def ivfFoldStream(docs: DataFrame, dir: String, id: String, vec: String,
-                    checkpoint: String)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch {
-        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          ivfFold(b.sparkSession, dir, b.toDF(), id, vec,
-            batchNo = batchId + 1L)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+  /** A vector row's partition: id-hashed (assignment and code tables). */
+  private def idPart(id: Column): Column = pmod(id, lit(StateParts.toLong))
+
+  /** One drift-audit row, LWW-keyed by `batch_no`. */
+  private def auditRow(spark: SparkSession, dir: String, batchNo: Long,
+                       ver: Long, nRows: Long, meanD: Double,
+                       buildMean: Double, drift: Double): Unit = {
+    import spark.implicits._
+    StateFold.upsert(spark, dir + AuditSuffix,
+      Seq((0L, batchNo, ver, nRows, meanD, buildMean, drift))
+        .toDF("part", "batch_no", "ver", "n_rows", "mean_dist",
+          "build_mean_dist", "drift_ratio"),
+      key = "batch_no")
+  }
 
   /** The RE-TRAIN the drift audit triggers: fit fresh centroids on the
     * CURRENT state vectors (base + every folded batch — the offline
@@ -281,31 +261,19 @@ object IncrementalAnn {
   def ivfRetract(spark: SparkSession, dir: String, retractIds: DataFrame,
                  id: String, retractVer: Long): Unit = {
     require(retractVer > 0, "retractVer must be positive")
-    graft.util.StateConf.bind(spark, dir, StateParts)
-    val x = retractIds.select(col(id)).distinct()
-      .localCheckpoint(true)
-    val parts = x.select(pmod(col(id), lit(StateParts.toLong)))
-      .distinct().collect().map(_.getLong(0))
-    if (parts.isEmpty) return
-    val gone = spark.read.parquet(dir)
-      .filter(col("part").isin(parts: _*))
-      .join(x, Seq(id), "left_semi")
-      .select(col("part"), col(id)).localCheckpoint(true)
-    val n = gone.count()
-    if (n == 0L) return
-    val auditPath = new org.apache.hadoop.fs.Path(dir + AuditSuffix)
-    if (auditPath.getFileSystem(spark.sessionState.newHadoopConf())
-      .exists(auditPath)) {
-      import spark.implicits._
-      val row = Seq((0L, -retractVer, retractVer, -n, 0.0, 0.0, 0.0))
-        .toDF("part", "batch_no", "ver", "n_rows", "mean_dist",
-          "build_mean_dist", "drift_ratio")
-      ParquetMerge.upsertPartitions(spark, dir + AuditSuffix, row,
-        "part", "batch_no", "ver")
+    StateFold.bound(spark, dir, StateParts) {
+      val st = spark.read.parquet(dir)
+      StateFold.locate(st, retractIds.select(col(id)), Seq("part", id),
+          Some(idPart _))
+        .foreach { gone =>
+          val n = gone.count()
+          if (n > 0L) {
+            if (StateFold.exists(spark, dir + AuditSuffix))
+              auditRow(spark, dir, -retractVer, retractVer, -n, 0.0, 0.0, 0.0)
+            StateFold.delete(spark, dir, st, gone, key = id)
+          }
+        }
     }
-    val none = spark.read.parquet(dir).limit(0)
-    ParquetMerge.deleteAndUpsertPartitions(spark, dir, gone, none,
-      "part", id, "ver")
   }
 
   /** Train the PQ codebooks on `base` and freeze them (stored table),
@@ -321,9 +289,7 @@ object IncrementalAnn {
   def pqInit(spark: SparkSession, dir: String, base: DataFrame,
              id: String, vec: String, m: Int = 8, kCent: Int = 16,
              seed: Long = 42L): Unit = {
-    val cbPath = new org.apache.hadoop.fs.Path(dir + CodebooksSuffix)
-    if (cbPath.getFileSystem(spark.sessionState.newHadoopConf())
-      .exists(cbPath)) {
+    if (StateFold.exists(spark, dir + CodebooksSuffix)) {
       foldCodes(spark, dir, encodeAgainstStored(spark, dir, base, id, vec),
         id, batchNo = 0L)
       return
@@ -380,16 +346,12 @@ object IncrementalAnn {
   }
 
   private def foldCodes(spark: SparkSession, dir: String, codes: DataFrame,
-                        id: String, batchNo: Long): Unit = {
-    graft.util.StateConf.bind(spark, dir, StateParts)
-    val rows = codes
-      .withColumn("part", pmod(col(id), lit(StateParts.toLong)))
-      .withColumn("ver", lit(batchNo))
-      .select("part", id, "ver", "codes")
-    ParquetMerge.upsertPartitions(spark, dir, rows, "part", id, "ver")
-    // exit-side bind: the first fold of a fresh root records its layout
-    graft.util.StateConf.bind(spark, dir, StateParts)
-  }
+                        id: String, batchNo: Long): Unit =
+    StateFold.bound(spark, dir, StateParts) {
+      StateFold.upsert(spark, dir,
+        StateFold.stamp(codes, idPart(col(id)), col(id), batchNo, "codes"),
+        key = id)
+    }
 
   private def readCodebooks(spark: SparkSession, dir: String)
   : (Array[(Int, Int, Array[Double])], Int, Int) = {

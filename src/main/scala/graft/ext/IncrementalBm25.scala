@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sink.ParquetMerge
+import graft.util.StateFold
 
 /** Incrementally-maintained BM25 retrieval index — the nightly-fold
   * pattern ([[graft.pipeline.IncrementalCuration]],
@@ -58,58 +58,39 @@ object IncrementalBm25 {
   val StatsSuffix = "_stats"
 
   /** Fold one batch of documents into the index. `batchNo` is the
-    * merge version — replaying a batch re-merges idempotently.
+    * merge version — replaying a batch re-merges idempotently, and
+    * the index is probe-consistent after every fold: a [[topK]]
+    * between folds scores exactly the corpus folded so far.
     */
   def fold(spark: SparkSession, dir: String, batch: DataFrame,
-           text: String, id: String, batchNo: Long): Unit = {
-    graft.util.StateConf.bind(spark, dir, StateParts)
-    val base = batch.select(col(id).as("doc"),
-      Tok.tokens(col(text)).as("_toks"))
-      .withColumn("dl", size(col("_toks")).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tf = base.select(col("doc"), col("dl"),
-      explode(col("_toks")).as("term"))
-      .groupBy("doc", "dl", "term").agg(count(lit(1)).as("tf"))
-    val rows = tf
-      .withColumn("part", pmod(xxhash64(col("term")), lit(StateParts.toLong)))
-      .withColumn("pk", concat_ws(":", col("doc"), col("term")))
-      .withColumn("ver", lit(batchNo))
-      .select("part", "pk", "ver", "doc", "term", "tf", "dl")
-    ParquetMerge.upsertPartitions(spark, dir, rows, "part", "pk", "ver")
-    val st = base.agg(count(lit(1)).as("n"),
-      coalesce(sum("dl"), lit(0L)).as("s")).head()
-    import spark.implicits._
-    val statsRow = Seq((0L, batchNo, batchNo, st.getLong(0), st.getLong(1)))
-      .toDF("part", "batch_no", "ver", "n_docs_delta", "sum_dl_delta")
-    ParquetMerge.upsertPartitions(spark, dir + StatsSuffix, statsRow,
-      "part", "batch_no", "ver")
-    base.unpersist()
-    // exit-side bind: the first fold of a fresh root records its layout
-    graft.util.StateConf.bind(spark, dir, StateParts)
-  }
+           text: String, id: String, batchNo: Long): Unit =
+    StateFold.bound(spark, dir, StateParts) {
+      val base = batch.select(col(id).as("doc"),
+        Tok.tokens(col(text)).as("_toks"))
+        .withColumn("dl", size(col("_toks")).cast("long"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val tf = base.select(col("doc"), col("dl"),
+        explode(col("_toks")).as("term"))
+        .groupBy("doc", "dl", "term").agg(count(lit(1)).as("tf"))
+      StateFold.upsert(spark, dir, StateFold.stamp(tf,
+        pmod(xxhash64(col("term")), lit(StateParts.toLong)),
+        concat_ws(":", col("doc"), col("term")).as("pk"), batchNo,
+        "doc", "term", "tf", "dl"))
+      val st = base.agg(count(lit(1)).as("n"),
+        coalesce(sum("dl"), lit(0L)).as("s")).head()
+      statsDelta(spark, dir, batchNo, batchNo, st.getLong(0), st.getLong(1))
+      base.unpersist()
+    }
 
-  /** The streaming face: each micro-batch of crawled docs folds into
-    * the index via foreachBatch — batchId+1 is the merge version, so
-    * an at-least-once replayed micro-batch re-merges postings AND
-    * stats deltas idempotently (checkpoint + LWW = effective
-    * exactly-once, the [[IncrementalAnn.ivfFoldStream]] contract).
-    * The index is probe-consistent after every committed batch: a
-    * [[topK]] between micro-batches scores exactly the corpus folded
-    * so far.
-    */
-  def foldStream(docs: DataFrame, dir: String, text: String, id: String,
-                 checkpoint: String)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch {
-        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          fold(b.sparkSession, dir, b.toDF(), text, id,
-            batchNo = batchId + 1L)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+  /** One corpus-stats delta row, LWW-keyed by `batch_no`. */
+  private def statsDelta(spark: SparkSession, dir: String, batchNo: Long,
+                         ver: Long, nDocs: Long, sumDl: Long): Unit = {
+    import spark.implicits._
+    StateFold.upsert(spark, dir + StatsSuffix,
+      Seq((0L, batchNo, ver, nDocs, sumDl))
+        .toDF("part", "batch_no", "ver", "n_docs_delta", "sum_dl_delta"),
+      key = "batch_no")
+  }
 
   /** Top-k BM25 probe against the folded index: identical scoring
     * expression tree to [[TextAnalysis.bm25TopK]] (shared verbatim
@@ -167,24 +148,17 @@ object IncrementalBm25 {
   def retractDocs(spark: SparkSession, dir: String, docIds: DataFrame,
                   id: String, retractVer: Long): Unit = {
     require(retractVer > 0, "retractVer must be positive")
-    graft.util.StateConf.bind(spark, dir, StateParts)
-    val mine = spark.read.parquet(dir)
-      .join(docIds.select(col(id).as("doc")), Seq("doc"), "left_semi")
-      .select("part", "pk", "doc", "dl").localCheckpoint(true)
-    val st = mine.groupBy("doc").agg(first("dl").as("dl"))
-      .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("s"))
-      .head()
-    val none = spark.read.parquet(dir)
-      .select("part", "pk", "ver", "doc", "term", "tf", "dl").limit(0)
-    ParquetMerge.deleteAndUpsertPartitions(spark, dir,
-      mine.select("part", "pk"), none, "part", "pk", "ver")
-    if (st.getLong(0) > 0L) {
-      import spark.implicits._
-      val negRow = Seq((0L, -retractVer, retractVer,
-          -st.getLong(0), -st.getLong(1)))
-        .toDF("part", "batch_no", "ver", "n_docs_delta", "sum_dl_delta")
-      ParquetMerge.upsertPartitions(spark, dir + StatsSuffix, negRow,
-        "part", "batch_no", "ver")
+    StateFold.bound(spark, dir, StateParts) {
+      val post = spark.read.parquet(dir)
+      val mine = StateFold.locate(post, docIds.select(col(id).as("doc")),
+        Seq("part", "pk", "doc", "dl")).get
+      val st = mine.groupBy("doc").agg(first("dl").as("dl"))
+        .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("s"))
+        .head()
+      StateFold.delete(spark, dir, post, mine.select("part", "pk"))
+      if (st.getLong(0) > 0L)
+        statsDelta(spark, dir, -retractVer, retractVer, -st.getLong(0),
+          -st.getLong(1))
     }
   }
 

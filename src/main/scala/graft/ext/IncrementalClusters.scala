@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sink.ParquetMerge
+import graft.util.StateFold
 
 /** Incrementally-maintained connected-component labels over the
   * near-dup pair graph — the state-fold pattern
@@ -58,11 +59,6 @@ object IncrementalClusters {
 
   val RedirectSuffix = "_redir"
 
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
-
   /** Fold one batch of undirected near-dup pair edges `(id_a, id_b)`
     * into the stored labeling. `batchNo` is the LWW merge version; a
     * replayed batch contracts entirely to self-loops and writes
@@ -81,17 +77,21 @@ object IncrementalClusters {
     * violation, same as the curation fold.
     */
   def fold(spark: SparkSession, dir: String, pairs: DataFrame,
-           batchNo: Long, maxIterations: Int = 30): Unit = {
+           batchNo: Long, maxIterations: Int = 30): Unit =
     // the redirect table is the pmod(src, StateParts)-laid-out one
     // (doc rows partition by insert batch — batch-number layout, not
     // a hash of this count)
-    graft.util.StateConf.bind(spark, dir + RedirectSuffix, StateParts)
+    StateFold.bound(spark, dir + RedirectSuffix, StateParts)(
+      foldEdges(spark, dir, pairs, batchNo, maxIterations))
+
+  private def foldEdges(spark: SparkSession, dir: String, pairs: DataFrame,
+                        batchNo: Long, maxIterations: Int): Unit = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e0 = pairs.select(col("id_a").cast("long").as("id_a"),
         col("id_b").cast("long").as("id_b"))
       .filter(col("id_a") =!= col("id_b"))
       .persist(lvl)
-    val hasState = exists(spark, dir)
+    val hasState = StateFold.exists(spark, dir)
     // current terminal labels of the batch's KNOWN endpoints: the
     // O(batch) endpoint set broadcasts into an inner join against the
     // doc table (one map-side scan — the corpus-sized state never
@@ -101,7 +101,7 @@ object IncrementalClusters {
     val known: DataFrame = (if (hasState) {
       val docT = spark.read.parquet(dir).select(col("doc"), col("r0"))
       val redir: DataFrame =
-        if (exists(spark, dir + RedirectSuffix))
+        if (StateFold.exists(spark, dir + RedirectSuffix))
           spark.read.parquet(dir + RedirectSuffix)
             .select(col("src"), col("dst"))
         else spark.range(0).select(col("id").as("src"), col("id").as("dst"))
@@ -147,7 +147,7 @@ object IncrementalClusters {
         .map(_.getPath.getName.stripPrefix("part=").toLong)
         .foldLeft(Long.MinValue)(math.max)
       val maxRedirVer =
-        if (exists(spark, dir + RedirectSuffix)) {
+        if (StateFold.exists(spark, dir + RedirectSuffix)) {
           val r = spark.read.parquet(dir + RedirectSuffix)
             .agg(max("ver")).head()
           if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
@@ -175,11 +175,8 @@ object IncrementalClusters {
       .select(col("doc"), col("cluster").as("r0"))
     // append-only rows partition by batch — the upsert touches ONLY
     // this fold's partition, historical partitions stay untouched
-    val docRows = newDocs
-      .withColumn("part", lit(batchNo))
-      .withColumn("pk", col("doc"))
-      .withColumn("ver", lit(batchNo))
-      .select("part", "pk", "ver", "doc", "r0")
+    val docRows = StateFold.stamp(newDocs, lit(batchNo),
+      col("doc").as("pk"), batchNo, "doc", "r0")
     // redirect maintenance, keeping the table FLAT:
     //  (a) demoted terminal labels point at their new terminal
     //  (b) existing redirects into a demoted label re-point at the new
@@ -187,43 +184,22 @@ object IncrementalClusters {
     val newRedirects = relabel.select(col("old_lbl").as("src"),
       col("new_lbl").as("dst"))
     val rewritten: DataFrame =
-      if (exists(spark, dir + RedirectSuffix))
+      if (StateFold.exists(spark, dir + RedirectSuffix))
         spark.read.parquet(dir + RedirectSuffix)
           .select(col("src"), col("dst"))
           .join(relabel, col("dst") === col("old_lbl"))
           .select(col("src"), col("new_lbl").as("dst"))
       else newRedirects.limit(0)
-    val redirRows = newRedirects.unionByName(rewritten)
-      .withColumn("part", pmod(col("src"), lit(StateParts.toLong)))
-      .withColumn("pk", col("src"))
-      .withColumn("ver", lit(batchNo))
-      .select("part", "pk", "ver", "src", "dst")
+    val redirRows = StateFold.stamp(newRedirects.unionByName(rewritten),
+        pmod(col("src"), lit(StateParts.toLong)), col("src").as("pk"),
+        batchNo, "src", "dst")
       // materialize BEFORE the doc-table write: redirRows reads the
       // redirect parquet, which its own upsert is about to rewrite
       .localCheckpoint(true)
-    ParquetMerge.upsertPartitions(spark, dir, docRows, "part", "pk", "ver")
-    ParquetMerge.upsertPartitions(spark, dir + RedirectSuffix, redirRows,
-      "part", "pk", "ver")
+    StateFold.upsert(spark, dir, docRows)
+    StateFold.upsert(spark, dir + RedirectSuffix, redirRows)
     e0.unpersist(); known.unpersist()
-    // exit-side bind: the first fold of a fresh root records its layout
-    graft.util.StateConf.bind(spark, dir + RedirectSuffix, StateParts)
   }
-
-  /** Streaming face: each micro-batch of pair edges folds through the
-    * same idempotent LWW merge (checkpoint + LWW = effective
-    * exactly-once, the [[IncrementalBm25.foldStream]] contract).
-    */
-  def foldStream(pairs: DataFrame, dir: String, checkpoint: String)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    pairs.writeStream
-      .foreachBatch {
-        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          fold(b.sparkSession, dir, b.toDF(), batchNo = batchId + 1L)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
 
   /** Current component labels — the same `(doc, cluster)` shape
     * [[TextDedup.nearDupClusters]] returns, which is what lets the
@@ -233,7 +209,7 @@ object IncrementalClusters {
   def labels(spark: SparkSession, dir: String): DataFrame = {
     val docT = spark.read.parquet(dir).select(col("doc"), col("r0"))
     val redir: DataFrame =
-      if (exists(spark, dir + RedirectSuffix))
+      if (StateFold.exists(spark, dir + RedirectSuffix))
         spark.read.parquet(dir + RedirectSuffix).select(col("src"), col("dst"))
       else spark.range(0).select(col("id").as("src"), col("id").as("dst"))
     docT.join(redir, docT("r0") === redir("src"), "left")
@@ -303,16 +279,8 @@ object IncrementalClusters {
     // redirects into an affected label are obsolete (their users were
     // rewritten with terminal labels); none may survive, or labels()
     // would re-route the rewritten rows
-    if (exists(spark, dir + RedirectSuffix)) {
-      val redir = spark.read.parquet(dir + RedirectSuffix)
-      val goneRedir = redir
-        .join(affected.withColumnRenamed("cluster", "dst"), Seq("dst"),
-          "left_semi")
-        .select("part", "pk").localCheckpoint(true)
-      val none = redir.select("part", "pk", "ver", "src", "dst").limit(0)
-      ParquetMerge.deleteAndUpsertPartitions(spark,
-        dir + RedirectSuffix, goneRedir, none, "part", "pk", "ver")
-    }
+    StateFold.retract(spark, dir + RedirectSuffix,
+      affected.withColumnRenamed("cluster", "dst"))
   }
 
   /** Partition-count maintenance for the doc table — the one table in
@@ -352,7 +320,7 @@ object IncrementalClusters {
     * healthy).
     */
   def auditRedirects(spark: SparkSession, dir: String): DataFrame = {
-    if (!exists(spark, dir + RedirectSuffix))
+    if (!StateFold.exists(spark, dir + RedirectSuffix))
       return spark.range(0).select(col("id").as("src"), col("id").as("dst"))
     val r = spark.read.parquet(dir + RedirectSuffix)
       .select(col("src"), col("dst"))

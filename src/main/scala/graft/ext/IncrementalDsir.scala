@@ -2,7 +2,6 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sink.ParquetMerge
 
 /** Incrementally-maintained DSIR model — the state-fold pattern
   * ([[IncrementalSketch]]) applied to the importance-resampling
@@ -35,6 +34,10 @@ import graft.sink.ParquetMerge
   */
 object IncrementalDsir {
 
+  /** Delta layout: one row per (bucket, batch), tag trailing. */
+  private val Layout = DeltaCompact.Table(Seq("bucket"),
+    Seq("raw_delta", "target_delta"), lit(0L), tagLeads = false)
+
   /** Fold one document batch into the stored model. `targetPred`
     * marks the batch's target-corpus rows (same predicate every fold
     * — the model's target slice accumulates alongside raw).
@@ -43,70 +46,35 @@ object IncrementalDsir {
     */
   def fold(spark: SparkSession, dir: String, docs: DataFrame,
            text: String, id: String, targetPred: Column, batchNo: Long,
-           m: Int = Dsir.DefaultBuckets): Unit = {
-    if (DeltaCompact.watermark(spark, dir).exists(batchNo <= _)) return
-    delta(spark, dir, docs, text, id, targetPred, batchNo, m,
-      sign = 1L, tag = "")
-  }
+           m: Int = Dsir.DefaultBuckets): Unit =
+    DeltaCompact.fold(spark, dir, batchNo)(
+      delta(spark, dir, docs, text, id, targetPred, m))
 
   /** RETRACT a doc set's grams from the model (right-to-be-forgotten):
     * counts are exact, so subtraction is sound — one NEGATIVE delta
-    * row per touched bucket, `r`-tagged so it can never collide with
-    * a fold's delta, idempotent under retry at the same `retractVer`.
-    * Rejected loudly at or below the compacted baseline version (its
-    * deltas no longer exist to offset; re-issuing would
-    * double-subtract).
+    * row per touched bucket ([[DeltaCompact.retract]]).
     */
   def retractDocs(spark: SparkSession, dir: String, docs: DataFrame,
                   text: String, id: String, targetPred: Column,
                   retractVer: Long,
-                  m: Int = Dsir.DefaultBuckets): Unit = {
-    DeltaCompact.requireRetractAboveBaseline(spark, dir, retractVer)
-    delta(spark, dir, docs, text, id, targetPred, retractVer, m,
-      sign = -1L, tag = "r")
-  }
+                  m: Int = Dsir.DefaultBuckets): Unit =
+    DeltaCompact.retract(spark, dir, retractVer)(
+      delta(spark, dir, docs, text, id, targetPred, m))
 
   private def delta(spark: SparkSession, dir: String, docs: DataFrame,
                     text: String, id: String, targetPred: Column,
-                    batchNo: Long, m: Int, sign: Long,
-                    tag: String): Unit = {
-    val rows = Dsir.modelCounts(docs, text, id, targetPred, m)
-      .select(col("bucket"), (col("n_raw") * sign).as("raw_delta"),
-        (col("n_target") * sign).as("target_delta"))
-      .withColumn("part", lit(0L))
-      .withColumn("pk", concat_ws(":", col("bucket"), lit(s"$batchNo$tag")))
-      .withColumn("ver", lit(batchNo))
-      .select("part", "pk", "ver", "bucket", "raw_delta", "target_delta")
-    ParquetMerge.upsertPartitions(spark, dir, rows, "part", "pk", "ver")
-  }
-
-  /** Streaming face: each crawl micro-batch folds through the same
-    * idempotent LWW delta merge (checkpoint + LWW = effective
-    * exactly-once, the fold-family contract).
-    */
-  def foldStream(docs: DataFrame, dir: String, text: String, id: String,
-                 targetPred: Column, checkpoint: String,
-                 m: Int = Dsir.DefaultBuckets)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch {
-        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          fold(b.sparkSession, dir, b.toDF(), text, id, targetPred,
-            batchNo = batchId + 1L, m = m)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+                    m: Int)(d: DeltaCompact.Delta): Unit =
+    d.write(spark, dir, Layout,
+      Dsir.modelCounts(docs, text, id, targetPred, m)
+        .select(col("bucket"), col("n_raw").as("raw_delta"),
+          col("n_target").as("target_delta")))
 
   /** Compact the delta table to one baseline row per bucket and
     * record the replay watermark — O(m) state forever after. Probe
     * output is unchanged (the sums are associative).
     */
   def compact(spark: SparkSession, dir: String): Long =
-    DeltaCompact.compact(spark, dir, Seq("bucket"),
-      Seq("raw_delta", "target_delta"), lit(0L),
-      foldRow = !col("pk").endsWith("r"))
+    DeltaCompact.compact(spark, dir, Layout)
 
   /** The maintained model, summed at read time — identical columns
     * and values to the one-shot [[Dsir.modelCounts]] over the folded

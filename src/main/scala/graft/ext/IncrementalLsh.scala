@@ -1,9 +1,9 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.sink.ParquetMerge
+import graft.util.StateFold
 
 /** Incrementally-maintained multi-table LSH bucket index — the missing
   * ANN tier of the fold family ([[IncrementalAnn]] covers IVF and PQ):
@@ -58,11 +58,6 @@ object IncrementalLsh {
   val VecsSuffix = "_vecs"
   val ConfSuffix = "_conf"
 
-  private def exists(spark: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sessionState.newHadoopConf()).exists(hp)
-  }
-
   /** The per-table join keys of a vector column under the (bits,
     * tables) geometry — verbatim [[VectorSearch.annTopKMultiTable]]
     * math, factored so fold and probe can never drift.
@@ -90,7 +85,7 @@ object IncrementalLsh {
     require(tables >= 1 && tables * bits <= 63,
       "tables >= 1 and tables*bits <= 63 (one long of sign bits)")
     val family = if (portable) "portable" else "native"
-    if (exists(spark, dir + ConfSuffix)) {
+    if (StateFold.exists(spark, dir + ConfSuffix)) {
       val (b0, t0, f0) = geometryFull(spark, dir)
       require(b0 == bits && t0 == tables && f0 == family,
         s"LSH geometry mismatch: stored (bits=$b0, tables=$t0, " +
@@ -131,51 +126,28 @@ object IncrementalLsh {
            id: String, vec: String, batchNo: Long, bits: Int = 6,
            tables: Int = 4, portable: Boolean = false): Unit = {
     conf(spark, dir, bits, tables, portable)
-    graft.util.StateConf.bind(spark, dir, StateParts)
-    val keyed = batch
-      .withColumn("_bf",
-        VectorSearch.bucketExprOf(tables * bits, vec, portable))
-      .select(col(id).cast("long").as("vec_id"),
-        explode(expr(subkeysSql(bits, tables))).as("key"))
-    val bucketRows = keyed
-      .withColumn("part", pmod(col("key"), lit(StateParts.toLong)))
-      .withColumn("pk", concat_ws(":", col("vec_id"), col("key")))
-      .withColumn("ver", lit(batchNo))
-      .select("part", "pk", "ver", "vec_id", "key")
-    ParquetMerge.upsertPartitions(spark, dir, bucketRows, "part", "pk",
-      "ver")
-    val vecRows = batch
-      .select(col(id).cast("long").as("vec_id"), col(vec).as("vec"))
-      .withColumn("part", pmod(col("vec_id"), lit(StateParts.toLong)))
-      .withColumn("pk", col("vec_id"))
-      .withColumn("ver", lit(batchNo))
-      .select("part", "pk", "ver", "vec_id", "vec")
-    ParquetMerge.upsertPartitions(spark, dir + VecsSuffix, vecRows,
-      "part", "pk", "ver")
-    // exit-side bind: the FIRST fold of a fresh root records its
-    // partition layout in the marker (the entry-side bind was a no-op
-    // on a then-absent directory)
-    graft.util.StateConf.bind(spark, dir, StateParts)
+    StateFold.bound(spark, dir, StateParts) {
+      StateFold.upsert(spark, dir, bucketRows(batch
+        .withColumn("_bf",
+          VectorSearch.bucketExprOf(tables * bits, vec, portable))
+        .select(col(id).cast("long").as("vec_id"),
+          explode(expr(subkeysSql(bits, tables))).as("key")), batchNo))
+      StateFold.upsert(spark, dir + VecsSuffix, StateFold.stamp(
+        batch.select(col(id).cast("long").as("vec_id"), col(vec).as("vec")),
+        vecPart(col("vec_id")), col("vec_id").as("pk"), batchNo,
+        "vec_id", "vec"))
+    }
   }
 
-  /** Streaming face of [[fold]] — checkpoint + LWW = effective
-    * exactly-once, the fold-family contract.
-    */
-  def foldStream(emb: DataFrame, dir: String, id: String, vec: String,
-                 checkpoint: String, bits: Int = 6, tables: Int = 4,
-                 portable: Boolean = false)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    emb.writeStream
-      .foreachBatch {
-        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          fold(b.sparkSession, dir, b.toDF(), id, vec,
-            batchNo = batchId + 1L, bits = bits, tables = tables,
-            portable = portable)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+  /** `(vec_id, key)` bucket rows as stamped state rows. */
+  private def bucketRows(keyed: DataFrame, ver: Long): DataFrame =
+    StateFold.stamp(keyed, pmod(col("key"), lit(StateParts.toLong)),
+      concat_ws(":", col("vec_id"), col("key")).as("pk"), ver,
+      "vec_id", "key")
+
+  /** A vector row's partition: id-hashed. */
+  private def vecPart(vecId: Column): Column =
+    pmod(vecId, lit(StateParts.toLong))
 
   /** Multi-table LSH top-k against the STORED index — byte-identical
     * output to [[VectorSearch.annTopKMultiTable]] over the folded
@@ -255,38 +227,25 @@ object IncrementalLsh {
   def retract(spark: SparkSession, dir: String, retractIds: DataFrame,
               id: String): Unit = {
     val (bits, tables, family) = geometryFull(spark, dir)
-    graft.util.StateConf.bind(spark, dir, StateParts)
-    val x = retractIds.select(col(id).cast("long").as("vec_id"))
-      .distinct().localCheckpoint(true)
-    val vparts = x.select(pmod(col("vec_id"), lit(StateParts.toLong)))
-      .distinct().collect().map(_.getLong(0))
-    if (vparts.isEmpty) return
-    // the retracted vectors' rows, read before their delete — their
-    // bucket keys recompute map-side from the stored vector
-    val xVecs = spark.read.parquet(dir + VecsSuffix)
-      .filter(col("part").isin(vparts: _*))
-      .join(x, Seq("vec_id"), "left_semi")
-      .select("vec_id", "vec").localCheckpoint(true)
-    val bucketGone = xVecs
-      .withColumn("_bf", VectorSearch.bucketExprOf(tables * bits, "vec",
-        family == "portable"))
-      .select(col("vec_id"), explode(expr(subkeysSql(bits, tables))).as("key"))
-      .withColumn("part", pmod(col("key"), lit(StateParts.toLong)))
-      .withColumn("pk", concat_ws(":", col("vec_id"), col("key")))
-      .select("part", "pk").localCheckpoint(true)
-    if (exists(spark, dir)) {
-      val none = spark.read.parquet(dir)
-        .select("part", "pk", "ver", "vec_id", "key").limit(0)
-      ParquetMerge.deleteAndUpsertPartitions(spark, dir, bucketGone, none,
-        "part", "pk", "ver")
+    StateFold.bound(spark, dir, StateParts) {
+      // the retracted vectors' rows, read before their delete — their
+      // bucket keys recompute map-side from the stored vector
+      val vecs = spark.read.parquet(dir + VecsSuffix)
+      StateFold.locate(vecs,
+        retractIds.select(col(id).cast("long").as("vec_id")),
+        Seq("part", "pk", "vec_id", "vec"), Some(vecPart _))
+        .foreach { xVecs =>
+          val bucketGone = bucketRows(xVecs
+            .withColumn("_bf", VectorSearch.bucketExprOf(tables * bits,
+              "vec", family == "portable"))
+            .select(col("vec_id"),
+              explode(expr(subkeysSql(bits, tables))).as("key")), 0L)
+            .select("part", "pk").localCheckpoint(true)
+          if (StateFold.exists(spark, dir))
+            StateFold.delete(spark, dir, spark.read.parquet(dir), bucketGone)
+          StateFold.delete(spark, dir + VecsSuffix, vecs,
+            xVecs.select("part", "pk"))
+        }
     }
-    val vecGone = xVecs.select(col("vec_id"))
-      .withColumn("part", pmod(col("vec_id"), lit(StateParts.toLong)))
-      .withColumn("pk", col("vec_id"))
-      .select("part", "pk")
-    val noneV = spark.read.parquet(dir + VecsSuffix)
-      .select("part", "pk", "ver", "vec_id", "vec").limit(0)
-    ParquetMerge.deleteAndUpsertPartitions(spark, dir + VecsSuffix,
-      vecGone, noneV, "part", "pk", "ver")
   }
 }

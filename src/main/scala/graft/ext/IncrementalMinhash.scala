@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sink.ParquetMerge
+import graft.util.StateFold
 
 /** Incrementally-maintained MinHash-LSH band index — the fifth
   * instance of the repo's state-fold pattern
@@ -53,37 +53,15 @@ object IncrementalMinhash {
     */
   def fold(spark: SparkSession, dir: String, batch: DataFrame,
            text: String, id: String, batchNo: Long,
-           shingleN: Int = 3, numPerms: Int = 64, bands: Int = 32): Unit = {
-    graft.util.StateConf.bind(spark, dir, StateParts)
-    val rows = TextDedup.bandBuckets(
-        TextDedup.docShingles(batch, text, id, shingleN), numPerms, bands)
-      .withColumn("part", pmod(col("bucket"), lit(StateParts.toLong)))
-      .withColumn("pk", concat_ws(":", col("doc"), col("band")))
-      .withColumn("ver", lit(batchNo))
-      .select("part", "pk", "ver", "doc", "band", "bucket")
-    ParquetMerge.upsertPartitions(spark, dir, rows, "part", "pk", "ver")
-    // exit-side bind: the first fold of a fresh root records its layout
-    graft.util.StateConf.bind(spark, dir, StateParts)
-  }
-
-  /** Streaming face of [[fold]]: each micro-batch folds through the
-    * same idempotent LWW merge, versioned by the streaming batchId
-    * (checkpoint + LWW = effective exactly-once, the
-    * [[IncrementalAnn.ivfFoldStream]] contract).
-    */
-  def foldStream(docs: DataFrame, dir: String, text: String, id: String,
-                 checkpoint: String)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch {
-        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          fold(b.sparkSession, dir, b.toDF(), text, id,
-            batchNo = batchId + 1L)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+           shingleN: Int = 3, numPerms: Int = 64, bands: Int = 32): Unit =
+    StateFold.bound(spark, dir, StateParts) {
+      StateFold.upsert(spark, dir, StateFold.stamp(
+        TextDedup.bandBuckets(
+          TextDedup.docShingles(batch, text, id, shingleN), numPerms, bands),
+        pmod(col("bucket"), lit(StateParts.toLong)),
+        concat_ws(":", col("doc"), col("band")).as("pk"), batchNo,
+        "doc", "band", "bucket"))
+    }
 
   /** Stored band rows, narrowed to the matcher's columns. */
   private def stored(spark: SparkSession, dir: String): DataFrame =
@@ -97,16 +75,10 @@ object IncrementalMinhash {
     * the surviving docs exactly.
     */
   def retractDocs(spark: SparkSession, dir: String,
-                  docIds: DataFrame, id: String): Unit = {
-    graft.util.StateConf.bind(spark, dir, StateParts)
-    val gone = spark.read.parquet(dir)
-      .join(docIds.select(col(id).as("doc")), Seq("doc"), "left_semi")
-      .select("part", "pk").localCheckpoint(true)
-    val none = spark.read.parquet(dir)
-      .select("part", "pk", "ver", "doc", "band", "bucket").limit(0)
-    ParquetMerge.deleteAndUpsertPartitions(spark, dir, gone, none,
-      "part", "pk", "ver")
-  }
+                  docIds: DataFrame, id: String): Unit =
+    StateFold.bound(spark, dir, StateParts) {
+      StateFold.retract(spark, dir, docIds.select(col(id).as("doc")))
+    }
 
   /** All-pairs verified near-dup matches over the folded table — the
     * unchanged one-shot kernels ([[TextDedup.bucketCandidates]] +

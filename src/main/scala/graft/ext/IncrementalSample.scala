@@ -25,48 +25,21 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalSample {
 
-  private def exists(spark: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sessionState.newHadoopConf()).exists(hp)
-  }
-
   /** Fold one batch into the stored sample: per stratum, keep the k
     * smallest (hash, key) rows of state ∪ batch.
     */
   def fold(spark: SparkSession, dir: String, batch: DataFrame,
            stratum: String, key: String, k: Int): Unit = {
-    require(k >= 1, "k must be >= 1")
     val b = batch.select(col(stratum), col(key))
-    val all =
-      if (exists(spark, dir))
+    rebuild(spark, dir,
+      if (graft.util.StateFold.exists(spark, dir))
         spark.read.parquet(dir)
           .select(col("stratum").as(stratum), col("key").as(key)
             .cast(b.schema(key).dataType))
           .unionByName(b)
-      else b
-    val next = Sampling.sampleExactK(
-        all.dropDuplicates(stratum, key), stratum, key, k)
-      .select(col(stratum).as("stratum"), col(key).as("key"))
-      // materialize before overwriting the parquet this plan reads
-      .localCheckpoint(true)
-    next.write.mode("overwrite").parquet(dir)
+      else b,
+      stratum, key, k)
   }
-
-  /** Streaming face: each micro-batch folds through the same
-    * set-semantic rewrite (idempotent under at-least-once replay).
-    */
-  def foldStream(docs: DataFrame, dir: String, stratum: String,
-                 key: String, k: Int, checkpoint: String)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch {
-        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          fold(b.sparkSession, dir, b.toDF(), stratum, key, k)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
 
   /** The current sample — the same `(key, stratum)` row set
     * [[Sampling.sampleExactK]] returns over the merged corpus.
@@ -90,6 +63,7 @@ object IncrementalSample {
         docs.select(col(stratum), col(key)).dropDuplicates(stratum, key),
         stratum, key, k)
       .select(col(stratum).as("stratum"), col(key).as("key"))
+      // materialize before overwriting the parquet this plan reads
       .localCheckpoint(true)
     next.write.mode("overwrite").parquet(dir)
   }

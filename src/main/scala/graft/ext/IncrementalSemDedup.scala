@@ -1,8 +1,9 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sink.ParquetMerge
+import graft.util.StateFold
 
 /** Incrementally-maintained SemDeDup state — the nightly-fold pattern
   * ([[graft.pipeline.IncrementalCuration]], [[IncrementalAnn]],
@@ -59,162 +60,136 @@ object IncrementalSemDedup {
 
   val CellStatsSuffix = "_cells"
 
+  /** Suffix of the one-row retraction watermark (and sequence). */
+  val RetractWmSuffix = "_rwm"
+
   /** Fold one batch of embeddings into the state. `batchNo` is the
     * merge version — replaying a batch re-merges idempotently (LWW on
     * vid; the cross join's extra self-pairs from the prior attempt
     * reproduce the intra-batch verdicts, dominance being
     * order-independent).
     */
-  val RetractWmSuffix = "_rwm"
-
   def fold(spark: SparkSession, dir: String, batch: DataFrame,
            id: String, vec: String, batchNo: Long, signBits: Int = 4,
-           threshold: Double = 0.45, maxCell: Long = 100000L): Unit = {
-    graft.util.StateConf.bind(spark, dir, StateParts)
-    val hPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    // the retraction replay guard (the curation fold's contract): a
-    // fold at or below the retraction watermark would re-merge rows
-    // retraction deleted — resurrecting retracted vectors
-    val rwmPath = new org.apache.hadoop.fs.Path(dir + RetractWmSuffix)
-    if (fs.exists(rwmPath)) {
-      val rwm = spark.read.parquet(dir + RetractWmSuffix)
-        .agg(max("wm")).head().getLong(0)
-      require(batchNo > rwm,
-        s"fold batchNo=$batchNo is at or below the retraction " +
-          s"watermark $rwm — fold post-retraction batches under " +
-          "fresh (higher) batch numbers")
-    }
-    val state: Option[DataFrame] =
-      if (fs.exists(hPath)) Some(spark.read.parquet(dir)) else None
-    val b = batch
-      .select(col(id).cast("long").as("vid"), col(vec).as("vec"))
-      .withColumn("cell", VectorSearch.signCell(col("vec"), signBits))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // an AvailableNow restart can deliver an empty micro-batch — a
-    // no-op fold, not an error
-    if (b.isEmpty) { b.unpersist(); return }
-    // the ascending-id arrival contract (the curation guard, same
-    // version-scoped form): batch ids must sit strictly between
-    // earlier-version and later-version state ids, so a genuine
-    // replay passes and an interleaving batch fails loudly BEFORE
-    // its wrong-way dominance verdicts could enter state
-    state.foreach { st =>
-      val bounds = st.agg(
-        max(when(col("ver") < batchNo, col("vid"))),
-        min(when(col("ver") > batchNo, col("vid")))).head()
-      val bRange = b.agg(min(col("vid")), max(col("vid"))).head()
-      if (!bRange.isNullAt(0)) {
-        val (minB, maxB) = (bRange.getLong(0), bRange.getLong(1))
-        def fail(detail: String): Nothing =
-          throw new IllegalArgumentException(
-            s"out-of-order batch: batchNo=$batchNo $detail — the " +
-              "ascending-id dominance contract is violated and the " +
-              "incremental fold would silently diverge from the " +
-              "one-shot semDedup; re-deliver batches in id order " +
-              "(a REPLAY of an already-folded batchNo with its " +
-              "original ids is allowed and idempotent)")
-        if (!bounds.isNullAt(0) && minB <= bounds.getLong(0))
-          fail(s"carries id $minB <= max id ${bounds.getLong(0)} of " +
-            "earlier-version state")
-        if (!bounds.isNullAt(1) && maxB >= bounds.getLong(1))
-          fail(s"carries id $maxB >= min id ${bounds.getLong(1)} of " +
-            "later-version state (a reused batchNo must carry its " +
-            "original ids, not new data)")
+           threshold: Double = 0.45, maxCell: Long = 100000L): Unit =
+    StateFold.bound(spark, dir, StateParts) {
+      // the retraction replay guard (the curation fold's contract): a
+      // fold at or below the retraction watermark would re-merge rows
+      // retraction deleted — resurrecting retracted vectors
+      if (StateFold.exists(spark, dir + RetractWmSuffix)) {
+        val rwm = spark.read.parquet(dir + RetractWmSuffix)
+          .agg(max("wm")).head().getLong(0)
+        require(batchNo > rwm,
+          s"fold batchNo=$batchNo is at or below the retraction " +
+            s"watermark $rwm — fold post-retraction batches under " +
+            "fresh (higher) batch numbers")
       }
+      val state: Option[DataFrame] =
+        if (StateFold.exists(spark, dir)) Some(spark.read.parquet(dir))
+        else None
+      val b = batch
+        .select(col(id).cast("long").as("vid"), col(vec).as("vec"))
+        .withColumn("cell", VectorSearch.signCell(col("vec"), signBits))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // an AvailableNow restart can deliver an empty micro-batch — a
+      // no-op fold, not an error
+      if (!b.isEmpty) {
+        // the ascending-id arrival contract (the curation guard, same
+        // version-scoped form): batch ids must sit strictly between
+        // earlier-version and later-version state ids, so a genuine
+        // replay passes and an interleaving batch fails loudly BEFORE
+        // its wrong-way dominance verdicts could enter state
+        state.foreach { st =>
+          val bounds = st.agg(
+            max(when(col("ver") < batchNo, col("vid"))),
+            min(when(col("ver") > batchNo, col("vid")))).head()
+          val bRange = b.agg(min(col("vid")), max(col("vid"))).head()
+          if (!bRange.isNullAt(0)) {
+            val (minB, maxB) = (bRange.getLong(0), bRange.getLong(1))
+            def fail(detail: String): Nothing =
+              throw new IllegalArgumentException(
+                s"out-of-order batch: batchNo=$batchNo $detail — the " +
+                  "ascending-id dominance contract is violated and the " +
+                  "incremental fold would silently diverge from the " +
+                  "one-shot semDedup; re-deliver batches in id order " +
+                  "(a REPLAY of an already-folded batchNo with its " +
+                  "original ids is allowed and idempotent)")
+            if (!bounds.isNullAt(0) && minB <= bounds.getLong(0))
+              fail(s"carries id $minB <= max id ${bounds.getLong(0)} of " +
+                "earlier-version state")
+            if (!bounds.isNullAt(1) && maxB >= bounds.getLong(1))
+              fail(s"carries id $maxB >= min id ${bounds.getLong(1)} of " +
+                "later-version state (a reused batchNo must carry its " +
+                "original ids, not new data)")
+          }
+        }
+        // the maxCell contract: cumulative cell sizes AFTER this fold may
+        // not cross the cap (prior sums exclude this batchNo's own delta
+        // rows so a replay prices its batch once, not twice)
+        val bCells = b.groupBy("cell").agg(count(lit(1)).as("n_delta"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val prior: Option[DataFrame] =
+          if (StateFold.exists(spark, dir + CellStatsSuffix))
+            Some(spark.read.parquet(dir + CellStatsSuffix)
+              .filter(col("ver") =!= batchNo)
+              .groupBy("cell").agg(sum("n_delta").as("n_prior")))
+          else None
+        val overCap = prior.fold(bCells.withColumn("n_prior", lit(0L)))(p =>
+          bCells.join(p, Seq("cell"), "left")
+            .withColumn("n_prior", coalesce(col("n_prior"), lit(0L))))
+          .filter(col("n_prior") + col("n_delta") > maxCell)
+          .limit(1).collect()
+        require(overCap.isEmpty, {
+          val r = overCap.head
+          s"fold would push cell ${r.getAs[Long]("cell")} past maxCell=" +
+            s"$maxCell — the sign quantizer has failed on this corpus " +
+            "(the one-shot form would exclude the cell from pairing); " +
+            "re-bin with more signBits or a trained quantizer and rebuild"
+        })
+        // dominance verdicts: a batch row dies to any lower-id cell-mate
+        // above the threshold — in state (dropped rows included: they
+        // still dominate) or in the batch itself. State is read only in
+        // the batch's cell partitions (the partition-pruned filter below
+        // is a handful of literals — at most 2^signBits values).
+        val bParts = bCells.select(
+          pmod(col("cell"), lit(StateParts.toLong)).as("p"))
+          .distinct().collect().map(_.getLong(0)).toSeq
+        val crossDropped = state.map { st =>
+          st.filter(col("part").isin(bParts: _*))
+            .select(col("cell"), col("vid").as("_ovid"), col("vec").as("_ovec"))
+            .join(b.select(col("cell"), col("vid"), col("vec")), Seq("cell"))
+            .filter(col("_ovid") < col("vid") &&
+              VectorSearch.cosine(col("vec"), col("_ovec")) > threshold)
+            .select(col("vid")).distinct()
+        }
+        val intraDropped = b.select(col("cell"), col("vid").as("_ovid"),
+          col("vec").as("_ovec"))
+          .join(b.select(col("cell"), col("vid"), col("vec"))
+            .hint("shuffle_hash"), Seq("cell"))
+          .filter(col("_ovid") < col("vid") &&
+            VectorSearch.cosine(col("vec"), col("_ovec")) > threshold)
+          .select(col("vid")).distinct()
+        val dropped = crossDropped
+          .fold(intraDropped)(_.unionByName(intraDropped)).distinct()
+        StateFold.upsert(spark, dir, StateFold.stamp(b
+            .join(dropped.withColumn("_dead", lit(true)), Seq("vid"), "left")
+            .withColumn("is_survivor",
+              coalesce(col("_dead"), lit(false)) === false),
+          pmod(col("cell"), lit(StateParts.toLong)), col("vid").as("pk"),
+          batchNo, "vid", "cell", "vec", "is_survivor"))
+        cellDelta(spark, dir, bCells, lit(batchNo), batchNo)
+        bCells.unpersist()
+      }
+      b.unpersist()
     }
-    // the maxCell contract: cumulative cell sizes AFTER this fold may
-    // not cross the cap (prior sums exclude this batchNo's own delta
-    // rows so a replay prices its batch once, not twice)
-    val bCells = b.groupBy("cell").agg(count(lit(1)).as("n_delta"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val statsPath = new org.apache.hadoop.fs.Path(dir + CellStatsSuffix)
-    val prior: Option[DataFrame] =
-      if (fs.exists(statsPath))
-        Some(spark.read.parquet(dir + CellStatsSuffix)
-          .filter(col("ver") =!= batchNo)
-          .groupBy("cell").agg(sum("n_delta").as("n_prior")))
-      else None
-    val overCap = prior.fold(bCells.withColumn("n_prior", lit(0L)))(p =>
-      bCells.join(p, Seq("cell"), "left")
-        .withColumn("n_prior", coalesce(col("n_prior"), lit(0L))))
-      .filter(col("n_prior") + col("n_delta") > maxCell)
-      .limit(1).collect()
-    require(overCap.isEmpty, {
-      val r = overCap.head
-      s"fold would push cell ${r.getAs[Long]("cell")} past maxCell=" +
-        s"$maxCell — the sign quantizer has failed on this corpus " +
-        "(the one-shot form would exclude the cell from pairing); " +
-        "re-bin with more signBits or a trained quantizer and rebuild"
-    })
-    // dominance verdicts: a batch row dies to any lower-id cell-mate
-    // above the threshold — in state (dropped rows included: they
-    // still dominate) or in the batch itself. State is read only in
-    // the batch's cell partitions (the partition-pruned filter below
-    // is a handful of literals — at most 2^signBits values).
-    val bParts = bCells.select(
-      pmod(col("cell"), lit(StateParts.toLong)).as("p"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val crossDropped = state.map { st =>
-      st.filter(col("part").isin(bParts: _*))
-        .select(col("cell"), col("vid").as("_ovid"), col("vec").as("_ovec"))
-        .join(b.select(col("cell"), col("vid"), col("vec")), Seq("cell"))
-        .filter(col("_ovid") < col("vid") &&
-          VectorSearch.cosine(col("vec"), col("_ovec")) > threshold)
-        .select(col("vid")).distinct()
-    }
-    val intraDropped = b.select(col("cell"), col("vid").as("_ovid"),
-      col("vec").as("_ovec"))
-      .join(b.select(col("cell"), col("vid"), col("vec"))
-        .hint("shuffle_hash"), Seq("cell"))
-      .filter(col("_ovid") < col("vid") &&
-        VectorSearch.cosine(col("vec"), col("_ovec")) > threshold)
-      .select(col("vid")).distinct()
-    val dropped = crossDropped.fold(intraDropped)(_.unionByName(intraDropped))
-      .distinct()
-    val rows = b
-      .join(dropped.withColumn("_dead", lit(true)), Seq("vid"), "left")
-      .withColumn("is_survivor", coalesce(col("_dead"), lit(false)) === false)
-      .withColumn("part", pmod(col("cell"), lit(StateParts.toLong)))
-      .withColumn("pk", col("vid"))
-      .withColumn("ver", lit(batchNo))
-      .select("part", "pk", "ver", "vid", "cell", "vec", "is_survivor")
-    ParquetMerge.upsertPartitions(spark, dir, rows, "part", "pk", "ver")
-    val statRows = bCells
-      .withColumn("part", lit(0L))
-      .withColumn("pk", concat_ws(":", col("cell"), lit(batchNo)))
-      .withColumn("ver", lit(batchNo))
-      .select("part", "pk", "ver", "cell", "n_delta")
-    ParquetMerge.upsertPartitions(spark, dir + CellStatsSuffix, statRows,
-      "part", "pk", "ver")
-    bCells.unpersist()
-    b.unpersist()
-    // exit-side bind: the first fold of a fresh root records its layout
-    graft.util.StateConf.bind(spark, dir, StateParts)
-  }
 
-  /** The streaming face: each micro-batch of embeddings folds via
-    * foreachBatch — batchId+1 is the merge version, so at-least-once
-    * replays re-merge idempotently (checkpoint + LWW = effective
-    * exactly-once, the [[IncrementalBm25.foldStream]] contract). The
-    * state is read-consistent between committed batches: a
-    * [[survivors]] read scores exactly the corpus folded so far.
-    */
-  def foldStream(emb: DataFrame, dir: String, id: String, vec: String,
-                 checkpoint: String, signBits: Int = 4,
-                 threshold: Double = 0.45, maxCell: Long = 100000L)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    emb.writeStream
-      .foreachBatch {
-        (mb: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          fold(mb.sparkSession, dir, mb.toDF(), id, vec,
-            batchNo = batchId + 1L, signBits = signBits,
-            threshold = threshold, maxCell = maxCell)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+  /** One cell-stats delta row per cell of `cells` (`cell`, `n_delta`),
+    * keyed `cell:<tag>`. */
+  private def cellDelta(spark: SparkSession, dir: String, cells: DataFrame,
+                        tag: Column, ver: Long): Unit =
+    StateFold.upsert(spark, dir + CellStatsSuffix, StateFold.stamp(cells,
+      lit(0L), concat_ws(":", col("cell"), tag).as("pk"), ver,
+      "cell", "n_delta"))
 
   /** Surviving embeddings of the folded state — the same (id, cell)
     * shape [[VectorSearch.semDedup]] returns, which is what lets the
@@ -276,21 +251,14 @@ object IncrementalSemDedup {
     // the retraction SEQUENCE (carried in the watermark file) keys
     // each retraction's negative stats rows disjointly — a second
     // retraction must never LWW-replace the first's decrements
-    val rwmPath = new org.apache.hadoop.fs.Path(dir + RetractWmSuffix)
-    val fs = rwmPath.getFileSystem(spark.sessionState.newHadoopConf())
     val rseq =
-      if (fs.exists(rwmPath))
+      if (StateFold.exists(spark, dir + RetractWmSuffix))
         spark.read.parquet(dir + RetractWmSuffix)
           .agg(max("rseq")).head().getLong(0) + 1L
       else 1L
-    val negStats = removed.groupBy("cell")
-      .agg((-count(lit(1))).as("n_delta"))
-      .withColumn("part", lit(0L))
-      .withColumn("pk", concat_ws(":", col("cell"), lit(s"r$rseq")))
-      .withColumn("ver", lit(wm))
-      .select("part", "pk", "ver", "cell", "n_delta")
-    ParquetMerge.upsertPartitions(spark, dir + CellStatsSuffix, negStats,
-      "part", "pk", "ver")
+    cellDelta(spark, dir,
+      removed.groupBy("cell").agg((-count(lit(1))).as("n_delta")),
+      lit(s"r$rseq"), wm)
     spark.range(1).select(lit(wm).as("wm"), lit(rseq).as("rseq"))
       .write.mode("overwrite").parquet(dir + RetractWmSuffix)
   }

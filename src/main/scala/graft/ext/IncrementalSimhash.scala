@@ -1,8 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sink.ParquetMerge
+import graft.util.StateFold
 
 /** Incrementally-maintained SimHash signature index — the sixth
   * instance of the repo's state-fold pattern
@@ -50,69 +50,39 @@ object IncrementalSimhash {
     * stored signature table. `batchNo` is the merge version; replays
     * re-merge idempotently (partition-scoped LWW).
     */
+  def fold(spark: SparkSession, dir: String, batch: DataFrame,
+           text: String, id: String, batchNo: Long): Unit =
+    StateFold.bound(spark, dir, StateParts) {
+      StateFold.upsert(spark, dir, StateFold.stamp(signed(batch, text, id),
+        docPart(col("doc")), col("doc").cast("string").as("pk"), batchNo,
+        "doc", "sim"))
+    }
+
+  /** A doc's partition: doc-identity hashed. */
+  private def docPart(doc: Column): Column =
+    pmod(xxhash64(doc), lit(StateParts.toLong))
+
+  /** `(doc, sim)` signatures of a batch, computed map-side. */
+  private def signed(batch: DataFrame, text: String, id: String): DataFrame =
+    batch
+      .select(col(id).as("doc"), TextDedup.tokens(col(text)).as("toks"))
+      .select(col("doc"), TextDedup.portableSimhashSig("toks").as("sim"))
+
   /** RETRACT a doc set: drop their signature rows. Signatures are
     * per-doc-pure and the table is doc-identity-partitioned, so the
     * delete is a partition-pruned rewrite and the post-delete table
     * equals a fresh fold over the surviving docs exactly. The
-    * partitions to open are DERIVED from the retract ids
-    * (`part = pmod(xxhash64(doc), StateParts)` — the same
+    * partitions to open are DERIVED from the retract ids (the same
     * derived-partition filter the IVF/LSH retract faces use), so the
     * locate step never scans the corpus-sized table whatever
     * StateParts a large deployment raises it to.
     */
-  def retractDocs(spark: SparkSession, dir: String,
-                  docIds: org.apache.spark.sql.DataFrame,
-                  id: String): Unit = {
-    graft.util.StateConf.bind(spark, dir, StateParts)
-    val x = docIds.select(col(id).as("doc")).distinct()
-      .localCheckpoint(true)
-    val parts = x.select(pmod(xxhash64(col("doc")),
-        lit(StateParts.toLong)))
-      .distinct().collect().map(_.getLong(0))
-    if (parts.isEmpty) return
-    val gone = spark.read.parquet(dir)
-      .filter(col("part").isin(parts: _*))
-      .join(x, Seq("doc"), "left_semi")
-      .select("part", "pk").localCheckpoint(true)
-    val none = spark.read.parquet(dir)
-      .select("part", "pk", "ver", "doc", "sim").limit(0)
-    ParquetMerge.deleteAndUpsertPartitions(spark, dir, gone, none,
-      "part", "pk", "ver")
-  }
-
-  def fold(spark: SparkSession, dir: String, batch: DataFrame,
-           text: String, id: String, batchNo: Long): Unit = {
-    graft.util.StateConf.bind(spark, dir, StateParts)
-    val rows = batch
-      .select(col(id).as("doc"), TextDedup.tokens(col(text)).as("toks"))
-      .select(col("doc"), TextDedup.portableSimhashSig("toks").as("sim"))
-      .withColumn("part", pmod(xxhash64(col("doc")), lit(StateParts.toLong)))
-      .withColumn("pk", col("doc").cast("string"))
-      .withColumn("ver", lit(batchNo))
-      .select("part", "pk", "ver", "doc", "sim")
-    ParquetMerge.upsertPartitions(spark, dir, rows, "part", "pk", "ver")
-    // exit-side bind: the first fold of a fresh root records its layout
-    graft.util.StateConf.bind(spark, dir, StateParts)
-  }
-
-  /** Streaming face of [[fold]]: each micro-batch folds through the
-    * same idempotent LWW merge, versioned by the streaming batchId
-    * (checkpoint + LWW = effective exactly-once, the
-    * [[IncrementalAnn.ivfFoldStream]] contract).
-    */
-  def foldStream(docs: DataFrame, dir: String, text: String, id: String,
-                 checkpoint: String)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch {
-        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          fold(b.sparkSession, dir, b.toDF(), text, id,
-            batchNo = batchId + 1L)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+  def retractDocs(spark: SparkSession, dir: String, docIds: DataFrame,
+                  id: String): Unit =
+    StateFold.bound(spark, dir, StateParts) {
+      StateFold.retract(spark, dir, docIds.select(col(id).as("doc")),
+        partOf = Some(docPart _))
+    }
 
   /** Stored signature rows, narrowed to the matcher's columns. */
   private def stored(spark: SparkSession, dir: String): DataFrame =
@@ -140,10 +110,7 @@ object IncrementalSimhash {
   def crossProbe(spark: SparkSession, dir: String, batch: DataFrame,
                  text: String, id: String,
                  maxHamming: Int = 3): DataFrame = {
-    val batchSigs = batch
-      .select(col(id).as("doc"), TextDedup.tokens(col(text)).as("toks"))
-      .select(col("doc"), TextDedup.portableSimhashSig("toks").as("sim"))
-    TextDedup.simhashCrossFromSigs(batchSigs, stored(spark, dir),
-      maxHamming)
+    TextDedup.simhashCrossFromSigs(signed(batch, text, id),
+      stored(spark, dir), maxHamming)
   }
 }

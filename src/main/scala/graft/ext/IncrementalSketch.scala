@@ -2,7 +2,6 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sink.ParquetMerge
 
 /** Incrementally-maintained count-min sketch — the state-fold pattern
   * applied to the sketch family: a new document batch's token counts
@@ -37,89 +36,53 @@ object IncrementalSketch {
 
   val VocabSuffix = "_vocab"
 
+  /** Delta layouts: cells tag trailing (`d:b:<ver><tag>`), vocab tag
+    * leading (`<ver><tag>:t` — the colon-free batch prefix keeps the
+    * pk injective whatever characters the term carries). */
+  private val CellLayout = DeltaCompact.Table(Seq("d", "b"), Seq("cell_n"),
+    lit(0L), tagLeads = false)
+  private val VocabLayout = DeltaCompact.Table(Seq("t"), Seq("n_delta"),
+    pmod(expr(Sketches.tokCodeSql), lit(8L)), tagLeads = true)
+
   /** Fold one document batch's token counts into the stored cell
     * matrix + vocab audit. Replay-idempotent via the (key, batchNo)
-    * LWW delta rows.
+    * LWW delta rows; a replay of a batch that [[cmsCompact]] already
+    * folded into the baseline is a no-op (cells and vocab are always
+    * compacted together, so the cell watermark governs both).
     */
   def cmsFold(spark: SparkSession, dir: String, docs: DataFrame,
               text: String, batchNo: Long, depth: Int = 4,
-              width: Int = 64): Unit = {
-    // a replay of a batch that [[compact]] already folded into the
-    // baseline is a no-op — re-adding its delta would double-count
-    // (the DeltaCompact watermark contract; cells and vocab are
-    // always compacted together, so the cell watermark governs both)
-    if (DeltaCompact.watermark(spark, dir).exists(batchNo <= _)) return
-    cmsDelta(spark, dir, docs, text, batchNo, depth, width,
-      sign = 1L, tag = "")
-  }
+              width: Int = 64): Unit =
+    DeltaCompact.fold(spark, dir, batchNo)(
+      cmsDelta(spark, dir, docs, text, depth, width))
 
   /** RETRACT a doc set's token counts from the CMS + vocab state: the
     * cells are EXACT per-(d, b) counts here, so subtraction is sound —
-    * one NEGATIVE delta row per touched cell/term, keyed with an `r`
-    * tag so it can never collide with a fold's delta (and a retried
-    * retraction at the same `retractVer` LWW-rewrites its own rows,
-    * idempotent). Valid before or after compaction — with one loud
-    * boundary: a `retractVer` at or below the compacted BASELINE
-    * version is rejected (its deltas were folded into the baseline;
-    * re-issuing would double-subtract).
+    * one NEGATIVE delta row per touched cell/term
+    * ([[DeltaCompact.retract]], guarded by the cell table's baseline).
     */
   def cmsRetract(spark: SparkSession, dir: String, docs: DataFrame,
                  text: String, retractVer: Long, depth: Int = 4,
-                 width: Int = 64): Unit = {
-    DeltaCompact.requireRetractAboveBaseline(spark, dir, retractVer)
-    cmsDelta(spark, dir, docs, text, retractVer, depth, width,
-      sign = -1L, tag = "r")
-  }
+                 width: Int = 64): Unit =
+    DeltaCompact.retract(spark, dir, retractVer)(
+      cmsDelta(spark, dir, docs, text, depth, width))
 
   private def cmsDelta(spark: SparkSession, dir: String, docs: DataFrame,
-                       text: String, batchNo: Long, depth: Int,
-                       width: Int, sign: Long, tag: String): Unit = {
+                       text: String, depth: Int, width: Int)
+                      (d: DeltaCompact.Delta): Unit = {
     require(depth >= 1 && width >= 1)
     val toks = docs.select(explode(Tok.tokens(col(text))).as("t"))
       .withColumn("c", expr(Sketches.tokCodeSql))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cellRows = toks
+    d.write(spark, dir, CellLayout, toks
       .select(explode(expr(s"transform(sequence(0, ${depth - 1}), d -> " +
         s"struct(d AS d, ${Sketches.cmsBucketSql("d", width)} AS b))")).as("db"))
       .groupBy(col("db.d").as("d"), col("db.b").as("b"))
-      .agg((count(lit(1)) * sign).as("cell_n"))
-      .withColumn("part", lit(0L))
-      .withColumn("pk", concat_ws(":", col("d"), col("b"),
-        lit(s"$batchNo$tag")))
-      .withColumn("ver", lit(batchNo))
-      .select("part", "pk", "ver", "d", "b", "cell_n")
-    ParquetMerge.upsertPartitions(spark, dir, cellRows, "part", "pk", "ver")
-    // batchNo prefixes the pk (colon-free), so pk is injective per
-    // (batch, term) whatever characters the term carries
-    val vocabRows = toks.groupBy("t")
-      .agg((count(lit(1)) * sign).as("n_delta"))
-      .withColumn("c", expr(Sketches.tokCodeSql))
-      .withColumn("part", pmod(col("c"), lit(8L)))
-      .withColumn("pk", concat(lit(s"$batchNo$tag"), lit(":"), col("t")))
-      .withColumn("ver", lit(batchNo))
-      .select("part", "pk", "ver", "t", "n_delta")
-    ParquetMerge.upsertPartitions(spark, dir + VocabSuffix, vocabRows,
-      "part", "pk", "ver")
+      .agg(count(lit(1)).as("cell_n")))
+    d.write(spark, dir + VocabSuffix, VocabLayout,
+      toks.groupBy("t").agg(count(lit(1)).as("n_delta")))
     toks.unpersist()
   }
-
-  /** Streaming face: each micro-batch folds through the same
-    * idempotent LWW delta merge (checkpoint + LWW = effective
-    * exactly-once, the fold-family contract).
-    */
-  def cmsFoldStream(docs: DataFrame, dir: String, text: String,
-                    checkpoint: String, depth: Int = 4, width: Int = 64)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch {
-        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          cmsFold(b.sparkSession, dir, b.toDF(), text,
-            batchNo = batchId + 1L, depth = depth, width = width)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
 
   /** Compact both delta tables to one baseline row per key and record
     * the replay watermark — bounds state at O(depth·width + vocab)
@@ -127,15 +90,8 @@ object IncrementalSketch {
     * are associative; [[DeltaCompact]]).
     */
   def cmsCompact(spark: SparkSession, dir: String): Long = {
-    // fold rows vs retraction rows by pk layout: cell pks END with the
-    // batch tag (`d:b:<ver><tag>` — a fold's ends in a digit), vocab
-    // pks LEAD with it (`<ver><tag>:t` — anchored, so a term carrying
-    // "r" can never match)
-    val wm = DeltaCompact.compact(spark, dir, Seq("d", "b"),
-      Seq("cell_n"), lit(0L), foldRow = !col("pk").endsWith("r"))
-    DeltaCompact.compact(spark, dir + VocabSuffix, Seq("t"),
-      Seq("n_delta"), pmod(expr(Sketches.tokCodeSql), lit(8L)),
-      foldRow = !col("pk").rlike("^\\d+r:"))
+    val wm = DeltaCompact.compact(spark, dir, CellLayout)
+    DeltaCompact.compact(spark, dir + VocabSuffix, VocabLayout)
     wm
   }
 
@@ -165,6 +121,11 @@ object IncrementalSketch {
 
   val GridSuffix = "_grid"
 
+  /** Grid delta layout: one row per (batch, group, cell), tag leading
+    * (the anchor keeps a group name carrying "r"/":" from matching). */
+  private val GridLayout = DeltaCompact.Table(Seq("grp", "cell"),
+    Seq("cell_n"), pmod(xxhash64(col("grp")), lit(4L)), tagLeads = true)
+
   /** Fold one batch's fixed-grid cell counts (the
     * [[Sketches.gridQuantiles]] state) into a persisted delta table —
     * same associative-cells argument as the CMS: the folded cell sums
@@ -175,45 +136,32 @@ object IncrementalSketch {
     */
   def gridFold(spark: SparkSession, dir: String, docs: DataFrame,
                valueCol: String, groupCol: String, batchNo: Long,
-               grid: Long = 64L): Unit = {
-    if (DeltaCompact.watermark(spark, dir + GridSuffix)
-      .exists(batchNo <= _)) return
-    gridDelta(spark, dir, docs, valueCol, groupCol, batchNo, grid,
-      sign = 1L, tag = "")
-  }
+               grid: Long = 64L): Unit =
+    DeltaCompact.fold(spark, dir + GridSuffix, batchNo)(
+      gridDelta(spark, dir, docs, valueCol, groupCol, grid))
 
   /** RETRACT a doc set's cells from the grid state — exact counts, so
-    * subtraction is sound; same `r`-tagged negative-delta contract as
+    * subtraction is sound; same negative-delta contract as
     * [[cmsRetract]].
     */
   def gridRetract(spark: SparkSession, dir: String, docs: DataFrame,
                   valueCol: String, groupCol: String, retractVer: Long,
-                  grid: Long = 64L): Unit = {
-    DeltaCompact.requireRetractAboveBaseline(spark, dir + GridSuffix,
-      retractVer)
-    gridDelta(spark, dir, docs, valueCol, groupCol, retractVer, grid,
-      sign = -1L, tag = "r")
-  }
+                  grid: Long = 64L): Unit =
+    DeltaCompact.retract(spark, dir + GridSuffix, retractVer)(
+      gridDelta(spark, dir, docs, valueCol, groupCol, grid))
 
   private def gridDelta(spark: SparkSession, dir: String, docs: DataFrame,
-                        valueCol: String, groupCol: String, batchNo: Long,
-                        grid: Long, sign: Long, tag: String): Unit = {
+                        valueCol: String, groupCol: String, grid: Long)
+                       (d: DeltaCompact.Delta): Unit = {
     require(grid >= 1)
-    val d = dir + GridSuffix
     // cell math copied verbatim from Sketches.gridQuantiles (integer
     // DIV with the pmod floor trick — exact for negatives too)
-    val rows = docs
+    d.write(spark, dir + GridSuffix, GridLayout, docs
       .select(col(groupCol).as("grp"),
         expr(s"(CAST($valueCol AS BIGINT) - " +
           s"pmod(CAST($valueCol AS BIGINT), ${grid}L)) DIV ${grid}L")
           .as("cell"))
-      .groupBy("grp", "cell").agg((count(lit(1)) * sign).as("cell_n"))
-      .withColumn("part", pmod(xxhash64(col("grp")), lit(4L)))
-      .withColumn("pk", concat(lit(s"$batchNo$tag"), lit(":"), col("grp"),
-        lit(":"), col("cell")))
-      .withColumn("ver", lit(batchNo))
-      .select("part", "pk", "ver", "grp", "cell", "cell_n")
-    ParquetMerge.upsertPartitions(spark, d, rows, "part", "pk", "ver")
+      .groupBy("grp", "cell").agg(count(lit(1)).as("cell_n")))
   }
 
   /** Per-group quantiles over the folded cells — the same output shape
@@ -243,11 +191,7 @@ object IncrementalSketch {
 
   /** Compact the grid delta table ([[DeltaCompact]]). */
   def gridCompact(spark: SparkSession, dir: String): Long =
-    DeltaCompact.compact(spark, dir + GridSuffix, Seq("grp", "cell"),
-      Seq("cell_n"), pmod(xxhash64(col("grp")), lit(4L)),
-      // grid pks lead with the batch tag (`<ver><tag>:grp:cell`) —
-      // the anchor keeps a group name carrying "r"/":" from matching
-      foldRow = !col("pk").rlike("^\\d+r:"))
+    DeltaCompact.compact(spark, dir + GridSuffix, GridLayout)
 
   /** Top-k estimate-vs-true audit over the folded state — the same
     * `(term, true_n, est_n, over_n)` shape [[Sketches.cmsTermCounts]]

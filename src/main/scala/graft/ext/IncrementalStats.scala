@@ -2,7 +2,6 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sink.ParquetMerge
 
 /** Incrementally-maintained per-source corpus profile — the
   * state-fold pattern applied to corpus monitoring: each document
@@ -30,85 +29,50 @@ import graft.sink.ParquetMerge
   */
 object IncrementalStats {
 
+  /** Delta layout: one row per (batch, source), tag leading. */
+  private val Layout = DeltaCompact.Table(Seq("source"),
+    Seq("n_docs", "n_tokens", "n_chars_total"),
+    pmod(xxhash64(col("source")), lit(4L)), tagLeads = true)
+
   /** Fold one document batch's per-source totals into the state.
-    * `docs` must carry `sourceCol`, `text`, and `n_chars`.
+    * `docs` must carry `sourceCol`, `text`, and `n_chars`. A replay of
+    * a batch already folded into the compacted baseline is a no-op
+    * (the [[DeltaCompact]] watermark contract).
     */
   def fold(spark: SparkSession, dir: String, docs: DataFrame,
-           text: String, sourceCol: String, batchNo: Long): Unit = {
-    // a replay of a batch already folded into the compacted baseline
-    // is a no-op (the DeltaCompact watermark contract)
-    if (DeltaCompact.watermark(spark, dir).exists(batchNo <= _)) return
-    delta(spark, dir, docs, text, sourceCol, batchNo, sign = 1L, tag = "")
-  }
+           text: String, sourceCol: String, batchNo: Long): Unit =
+    DeltaCompact.fold(spark, dir, batchNo)(
+      delta(spark, dir, docs, text, sourceCol))
 
-  /** RETRACT a doc set's totals: one NEGATIVE delta row per source,
-    * `r`-tagged so it never collides with a fold's delta (a retried
-    * retraction at the same `retractVer` LWW-rewrites its own rows —
-    * idempotent). Sums are associative, so subtraction is exact.
-    * Valid before or after compaction, with one loud boundary: a
-    * `retractVer` at or below the compacted baseline version is
-    * rejected (those deltas were folded into the baseline —
-    * re-issuing would double-subtract). Note `probeAsOf` semantics:
-    * the negative row carries `retractVer`, so as-of probes at
-    * earlier versions still reconstruct the PRE-retraction history —
-    * time travel and retraction compose.
+  /** RETRACT a doc set's totals: one NEGATIVE delta row per source
+    * ([[DeltaCompact.retract]]). Note `probeAsOf` semantics: the
+    * negative row carries `retractVer`, so as-of probes at earlier
+    * versions still reconstruct the PRE-retraction history — time
+    * travel and retraction compose.
     */
   def retractFold(spark: SparkSession, dir: String, docs: DataFrame,
                   text: String, sourceCol: String,
-                  retractVer: Long): Unit = {
-    DeltaCompact.requireRetractAboveBaseline(spark, dir, retractVer)
-    delta(spark, dir, docs, text, sourceCol, retractVer,
-      sign = -1L, tag = "r")
-  }
+                  retractVer: Long): Unit =
+    DeltaCompact.retract(spark, dir, retractVer)(
+      delta(spark, dir, docs, text, sourceCol))
 
   private def delta(spark: SparkSession, dir: String, docs: DataFrame,
-                    text: String, sourceCol: String, batchNo: Long,
-                    sign: Long, tag: String): Unit = {
-    val rows = docs
+                    text: String, sourceCol: String)
+                   (d: DeltaCompact.Delta): Unit =
+    d.write(spark, dir, Layout, docs
       .select(col(sourceCol).as("source"),
         Tok.count(col(text)).cast("long").as("_nt"), col("n_chars"))
       .groupBy("source")
-      .agg((count(lit(1)) * sign).as("n_docs"),
-        (coalesce(sum("_nt"), lit(0L)) * sign).as("n_tokens"),
-        (coalesce(sum("n_chars"), lit(0L)) * sign).as("n_chars_total"))
-      .withColumn("part", pmod(xxhash64(col("source")), lit(4L)))
-      .withColumn("pk", concat(lit(s"$batchNo$tag"), lit(":"),
-        col("source")))
-      .withColumn("ver", lit(batchNo))
-      .select("part", "pk", "ver", "source", "n_docs", "n_tokens",
-        "n_chars_total")
-    ParquetMerge.upsertPartitions(spark, dir, rows, "part", "pk", "ver")
-  }
-
-  /** Streaming face: each micro-batch folds one delta row per source
-    * through the idempotent LWW merge (checkpoint + LWW = effective
-    * exactly-once, the fold-family contract).
-    */
-  def foldStream(docs: DataFrame, dir: String, text: String,
-                 sourceCol: String, checkpoint: String)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch {
-        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          fold(b.sparkSession, dir, b.toDF(), text, sourceCol,
-            batchNo = batchId + 1L)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .agg(count(lit(1)).as("n_docs"),
+        coalesce(sum("_nt"), lit(0L)).as("n_tokens"),
+        coalesce(sum("n_chars"), lit(0L)).as("n_chars_total")))
 
   /** Compact the delta table to one baseline row per source and
     * record the replay watermark — state becomes O(sources) however
     * many batches have folded ([[DeltaCompact]]).
     */
   def compact(spark: SparkSession, dir: String): Long =
-    DeltaCompact.compact(spark, dir, Seq("source"),
-      Seq("n_docs", "n_tokens", "n_chars_total"),
-      pmod(xxhash64(col("source")), lit(4L)),
-      // profile pks lead with the batch tag (`<ver><tag>:source`) —
-      // anchored, so a source name carrying "r" never matches
-      foldRow = !col("pk").rlike("^\\d+r:"))
+    DeltaCompact.compact(spark, dir, Layout)
 
   /** The folded per-source profile — the same `(source, n_docs,
     * n_tokens, n_chars_total, avg_tokens)` shape the one-shot

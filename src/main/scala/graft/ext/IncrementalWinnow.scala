@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sink.ParquetMerge
+import graft.util.StateFold
 
 /** Incrementally-maintained winnowing-fingerprint table — the fourth
   * instance of the repo's state-fold pattern
@@ -39,6 +39,18 @@ object IncrementalWinnow {
     * corpus — re-crawled identity goes through the curation fold
     * first).
     */
+  def fold(spark: SparkSession, dir: String, batch: DataFrame,
+           text: String, id: String, batchNo: Long,
+           k: Int = 3, w: Int = 4, portableHash: Boolean = true): Unit =
+    StateFold.bound(spark, dir, StateParts) {
+      StateFold.upsert(spark, dir, StateFold.stamp(
+        TextDedup.winnowingFingerprints(batch, text, id, k, w, portableHash)
+          .select(col("doc"), col("fp")).distinct(),
+        pmod(col("fp"), lit(StateParts.toLong)),
+        concat_ws(":", col("doc"), col("fp")).as("pk"), batchNo,
+        "doc", "fp"))
+    }
+
   /** RETRACT a doc set: drop their fingerprint rows. Fingerprints are
     * per-doc-pure, so the post-delete table equals a fresh fold over
     * the surviving docs exactly — no fate recompute. The table is
@@ -46,35 +58,11 @@ object IncrementalWinnow {
     * one index scan (the retraction-rare-path trade the band index
     * makes too); the rewrite itself is partition-scoped.
     */
-  def retractDocs(spark: SparkSession, dir: String,
-                  docIds: org.apache.spark.sql.DataFrame,
-                  id: String): Unit = {
-    graft.util.StateConf.bind(spark, dir, StateParts)
-    val gone = spark.read.parquet(dir)
-      .join(docIds.select(col(id).as("doc")), Seq("doc"), "left_semi")
-      .select("part", "pk").localCheckpoint(true)
-    val none = spark.read.parquet(dir)
-      .select("part", "pk", "ver", "doc", "fp").limit(0)
-    ParquetMerge.deleteAndUpsertPartitions(spark, dir, gone, none,
-      "part", "pk", "ver")
-  }
-
-  def fold(spark: SparkSession, dir: String, batch: DataFrame,
-           text: String, id: String, batchNo: Long,
-           k: Int = 3, w: Int = 4, portableHash: Boolean = true): Unit = {
-    graft.util.StateConf.bind(spark, dir, StateParts)
-    val fps = TextDedup.winnowingFingerprints(batch, text, id, k, w,
-      portableHash)
-      .select(col("doc"), col("fp")).distinct()
-    val rows = fps
-      .withColumn("part", pmod(col("fp"), lit(StateParts.toLong)))
-      .withColumn("pk", concat_ws(":", col("doc"), col("fp")))
-      .withColumn("ver", lit(batchNo))
-      .select("part", "pk", "ver", "doc", "fp")
-    ParquetMerge.upsertPartitions(spark, dir, rows, "part", "pk", "ver")
-    // exit-side bind: the first fold of a fresh root records its layout
-    graft.util.StateConf.bind(spark, dir, StateParts)
-  }
+  def retractDocs(spark: SparkSession, dir: String, docIds: DataFrame,
+                  id: String): Unit =
+    StateFold.bound(spark, dir, StateParts) {
+      StateFold.retract(spark, dir, docIds.select(col(id).as("doc")))
+    }
 
   /** All-pairs passage-reuse matches over the folded table — the
     * unchanged [[TextDedup.winnowingMatchesFromFps]] kernel reading

@@ -1337,14 +1337,9 @@ object TextDedup {
     (labels, iter)
   }
 
-  /** Min-label propagation variant (O(graph diameter) rounds) — kept
-    * as an independent twin for cross-checking the star contraction and
-    * for shallow graphs where per-round cost matters more than round
-    * count.
+  /** Min-label propagation (O(graph diameter) rounds) — kept as an
+    * independent twin for cross-checking the star contraction.
     */
-  def nearDupClustersPropagate(pairs: DataFrame, maxIterations: Int = 50): DataFrame =
-    propagateLabels(pairs, maxIterations)._1
-
   private[graft] def propagateLabels(pairs: DataFrame,
                                      maxIterations: Int = 50): (DataFrame, Int) = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK

@@ -238,6 +238,18 @@ object VectorExpressions {
       "portable_lsh_bucket bits must be in [1, 63]")
     override def dataType: DataType = LongType
     override def prettyName: String = "portable_lsh_bucket"
+
+    override def checkInputDataTypes()
+    : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+      import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
+      child.dataType match {
+        case ArrayType(FloatType | DoubleType, _) => TypeCheckSuccess
+        case other => TypeCheckFailure(
+          s"portable_lsh_bucket requires array<float> or array<double>, " +
+            s"got ${other.sql}")
+      }
+    }
+
     // NULL-input fidelity lives in the [[portable_lsh_bucket]] wrapper
     // (a coalesce to 0), keeping this expression on the standard
     // null-propagating codegen path.

@@ -63,13 +63,6 @@ object Scale {
     path.fold(w.saveAsTable(table))(p => w.option("path", p).saveAsTable(table))
   }
 
-  /** Repartition by key with an explicit partition count — reuse one
-    * partitioning across several stages (aggregate + join on the same
-    * key) instead of letting each stage shuffle independently.
-    */
-  def partitionByKey(df: DataFrame, key: String, partitions: Int): DataFrame =
-    df.repartition(partitions, col(key))
-
   /** Size a frame to `targetBytes` output files using Catalyst's size
     * estimate — the small-file compaction step every long-running
     * 100 TB table needs (a daily pipeline writing 32 shuffle partitions

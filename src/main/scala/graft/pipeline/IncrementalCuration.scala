@@ -1,9 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.{BloomGuard, TextAnalysis, TextDedup}
 import graft.sink.ParquetMerge
+import graft.util.StateFold
 
 /** The daily-crawl-update path END TO END: fold document batches into a
   * persistent curated-corpus table — quality gate → cross-batch exact
@@ -191,283 +192,235 @@ object IncrementalCuration {
                    minQuality: Double,
                    jaccardThreshold: Double,
                    maxPostings: Long, indexed: Boolean,
-                   retractable: Boolean = false): Unit = {
-    graft.util.StateConf.bind(spark, stateDir, StateParts)
-    val hPath = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    // a fold at or below the retraction watermark would re-merge rows
-    // retraction deleted — resurrecting retracted docs; fail loudly
-    val rwmPath = new org.apache.hadoop.fs.Path(stateDir + RetractWmSuffix)
-    if (fs.exists(rwmPath)) {
-      val rwm = spark.read.parquet(stateDir + RetractWmSuffix)
-        .agg(max("wm")).head().getLong(0)
-      require(batchNo > rwm,
-        s"fold batchNo=$batchNo is at or below the retraction " +
-          s"watermark $rwm — replaying a pre-retraction batch would " +
-          "resurrect retracted docs; fold post-retraction batches " +
-          "under fresh (higher) batch numbers")
-    }
-    val state: Option[DataFrame] =
-      if (fs.exists(hPath)) Some(spark.read.parquet(stateDir)) else None
-    // r15: fan out the batch before the quality regexes — a single-file
-    // batch scan otherwise runs the whole quality gate (and everything
-    // fused above the first exchange) on one core; no-op on multi-split
-    // inputs (util.FanOut)
-    val qualified = TextAnalysis.qualityScore(graft.util.FanOut(batch), text)
-      .filter(col("quality_score") >= minQuality)
-      .select(col(id), col(text),
-        col("n_words").cast("long").as("n_words"), col("quality_score"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ENFORCE the ascending-id arrival contract the convergence proof
-    // rests on (class doc, first bullet): a batch whose ids interleave
-    // with other batches' ids would fold with the near-dup "remove the
-    // higher id" rule pointing the WRONG way and silently diverge from
-    // the one-shot rebuild. The check is VERSION-SCOPED, so a genuine
-    // REPLAY (foreachBatch at-least-once re-delivery) passes while a
-    // reused batchNo carrying DIFFERENT ids — the fresh-checkpoint
-    // restart that re-numbers foreachBatch ids from 0 — fails loudly:
-    // the batch's qualified ids must sit strictly BETWEEN everything
-    // folded under smaller versions and everything folded under larger
-    // ones. (For a fresh batchNo > max ver this degenerates to the
-    // plain "above all of state" rule; for a replay, the batch lands
-    // back in its original id slot by construction.) Bounds are taken
-    // over the QUALIFIED rows, not the raw batch: a quality-dropped
-    // straggler never enters state in either the incremental or the
-    // one-shot path, so it cannot affect convergence and must not kill
-    // the stream. Cost: one column-pruned (id, ver) conditional-agg
-    // scan of state per batch — state is read for the bloom prefilter
-    // anyway, and a silently wrong corpus costs more.
-    state.foreach { st =>
-      val bounds = st.agg(
-        max(when(col("ver") < batchNo, col(id))),
-        min(when(col("ver") > batchNo, col(id)))).head()
-      val bRange = qualified.agg(min(col(id)), max(col(id))).head()
-      if (!bRange.isNullAt(0)) {
-        val (minB, maxB) = (bRange.getLong(0), bRange.getLong(1))
-        def fail(detail: String): Nothing =
-          throw new IllegalArgumentException(
-            s"out-of-order batch: batchNo=$batchNo $detail — the " +
-              "ascending-id convergence contract is violated and the " +
-              "incremental fold would silently diverge from the " +
-              "from-scratch rebuild; re-deliver batches in id order " +
-              "(a REPLAY of an already-folded batchNo with its " +
-              "original ids is allowed and idempotent)")
-        if (!bounds.isNullAt(0) && minB <= bounds.getLong(0))
-          fail(s"carries id $minB <= max id ${bounds.getLong(0)} of " +
-            "earlier-version state")
-        if (!bounds.isNullAt(1) && maxB >= bounds.getLong(1))
-          fail(s"carries id $maxB >= min id ${bounds.getLong(1)} of " +
-            "later-version state (a reused batchNo must carry its " +
-            "original ids, not new data)")
+                   retractable: Boolean = false): Unit =
+    StateFold.bound(spark, stateDir, StateParts) {
+      // a fold at or below the retraction watermark would re-merge rows
+      // retraction deleted — resurrecting retracted docs; fail loudly
+      if (StateFold.exists(spark, stateDir + RetractWmSuffix)) {
+        val rwm = spark.read.parquet(stateDir + RetractWmSuffix)
+          .agg(max("wm")).head().getLong(0)
+        require(batchNo > rwm,
+          s"fold batchNo=$batchNo is at or below the retraction " +
+            s"watermark $rwm — replaying a pre-retraction batch would " +
+            "resurrect retracted docs; fold post-retraction batches " +
+            "under fresh (higher) batch numbers")
       }
-    }
-    // cross-batch exact dedup: a batch text already present in state
-    // (survivor OR tombstone — both predate the batch and hold the
-    // smaller id) is dropped; first-id-wins settles intra-batch copies
-    val newb = state match {
-      case None => qualified
-      case Some(st) =>
-        // r15: pass the sketch capacity explicitly — parquet count() is
-        // a metadata-only job, while BloomGuard's own fallback count
-        // re-scans state WITH the normalize expression evaluated. Row
-        // count over-estimates the distinct-normal key count, which
-        // only lowers the realized fpp (capacity-independent
-        // correctness is BloomGuard's documented contract).
-        BloomGuard.newDocs(qualified, st.select(col(text)), text,
-          expectedItems = st.count())
-    }
-    val dedupedB = TextDedup.exactNormalized(newb, text, id)
-      .drop("text_hash")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // near-dup losers: new vs ALL state rows (tombstones included —
-    // the convergence clause), plus pairs within the batch itself.
-    // Indexed mode probes the stored posting table; plain mode
-    // re-shingles the state text. Retractable mode excludes the
-    // stored EXACT-dup rows from the probe — the one-shot pairs docs
-    // among the exact-deduped set only, and an exact loser's RAW text
-    // (which shingling sees) can differ from its keeper's.
-    // r15: shingle the deduped batch ONCE — the intra-pair pass, the
-    // plain-mode cross probe, and the indexed posting fold all consume
-    // the same exploded (doc, sh) table instead of re-tokenizing the
-    // batch per kernel
-    val shB = TextDedup.docShingles(dedupedB, text, id, n = 3)
-      .select(col("doc"), explode(col("sh")).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val crossPairs = state match {
-      case None => None
-      case Some(st) if indexed =>
-        Some(TextDedup.crossNearDupsHashed(dedupedB,
-          spark.read.parquet(stateDir + PostingsSuffix)
-            .select(col("doc"), col("shc")),
-          spark.read.parquet(stateDir + DfSuffix)
-            .select(col("shc"), col("sh"), col("df_delta")),
-          text, id, shingleN = 3, threshold = jaccardThreshold,
-          maxPostings = maxPostings)
-          .select(col("id_old").as("id_a"), col("id_new").as("id_b")))
-      case Some(st) =>
-        val probeSide =
-          if (retractable) st.filter(col("in_deduped")) else st
-        Some(TextDedup.crossNearDupsFromNewShingles(
-          shB.select(col("doc").as("id_new"), col("sh")),
-          probeSide, text, id,
-          shingleN = 3, threshold = jaccardThreshold,
-          maxPostings = maxPostings)
-          .select(col("id_old").as("id_a"), col("id_new").as("id_b")))
-    }
-    val intraPairs = TextDedup.ngramJaccardPairsFromShingles(shB,
-      threshold = jaccardThreshold, maxPostings = maxPostings)
-      .select(col("id_a"), col("id_b"))
-    val pairs0 = crossPairs.fold(intraPairs)(_.unionByName(intraPairs))
-    // retractable mode writes the edge table AFTER the state upsert
-    // has overwritten the very files the cross probe reads — pin the
-    // pair set NOW (eager local checkpoint; it is O(batch pairs)) or
-    // the second action would re-probe the mutated state and record
-    // the batch's docs as their own near-dup pairs
-    val pairs =
-      if (retractable) pairs0.localCheckpoint(true) else pairs0
-    val losers = pairs.select(col("id_b").as(id)).distinct()
-    val keptRows = dedupedB
-      .join(losers.withColumn("_lost", lit(true)), Seq(id), "left")
-      .withColumn("is_survivor", coalesce(col("_lost"), lit(false)) === false)
-      .drop("_lost")
-    val rows =
-      if (!retractable)
-        keptRows
-          .withColumn("part", pmod(col(id), lit(StateParts.toLong)))
-          .withColumn("ver", lit(batchNo))
-          .select(col("part"), col(id), col("ver"), col(text),
-            col("n_words"), col("quality_score"), col("is_survivor"))
-      else {
-        // exact-dup losers of THIS batch: qualified rows that did not
-        // reach the deduped set (dropped cross-batch by the bloom
-        // guard or intra-batch by first-id-wins). Stored so [[retract]]
-        // can promote a group's next member when its keeper leaves.
-        val exactLosers = qualified
-          .join(dedupedB.select(col(id)), Seq(id), "left_anti")
-          .withColumn("is_survivor", lit(false))
-          .withColumn("in_deduped", lit(false))
-        keptRows.withColumn("in_deduped", lit(true))
-          .unionByName(exactLosers)
-          .withColumn("text_hash",
-            TextDedup.normalizedHash(col(text), col(id)))
-          .withColumn("part", pmod(col(id), lit(StateParts.toLong)))
-          .withColumn("ver", lit(batchNo))
-          .select(col("part"), col(id), col("ver"), col(text),
-            col("n_words"), col("quality_score"), col("is_survivor"),
-            col("in_deduped"), col("text_hash"))
+      val state: Option[DataFrame] =
+        if (StateFold.exists(spark, stateDir))
+          Some(spark.read.parquet(stateDir))
+        else None
+      // r15: fan out the batch before the quality regexes — a single-file
+      // batch scan otherwise runs the whole quality gate (and everything
+      // fused above the first exchange) on one core; no-op on multi-split
+      // inputs (util.FanOut)
+      val qualified = TextAnalysis.qualityScore(graft.util.FanOut(batch), text)
+        .filter(col("quality_score") >= minQuality)
+        .select(col(id), col(text),
+          col("n_words").cast("long").as("n_words"), col("quality_score"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // ENFORCE the ascending-id arrival contract the convergence proof
+      // rests on (class doc, first bullet): a batch whose ids interleave
+      // with other batches' ids would fold with the near-dup "remove the
+      // higher id" rule pointing the WRONG way and silently diverge from
+      // the one-shot rebuild. The check is VERSION-SCOPED, so a genuine
+      // REPLAY (foreachBatch at-least-once re-delivery) passes while a
+      // reused batchNo carrying DIFFERENT ids — the fresh-checkpoint
+      // restart that re-numbers foreachBatch ids from 0 — fails loudly:
+      // the batch's qualified ids must sit strictly BETWEEN everything
+      // folded under smaller versions and everything folded under larger
+      // ones. (For a fresh batchNo > max ver this degenerates to the
+      // plain "above all of state" rule; for a replay, the batch lands
+      // back in its original id slot by construction.) Bounds are taken
+      // over the QUALIFIED rows, not the raw batch: a quality-dropped
+      // straggler never enters state in either the incremental or the
+      // one-shot path, so it cannot affect convergence and must not kill
+      // the stream. Cost: one column-pruned (id, ver) conditional-agg
+      // scan of state per batch — state is read for the bloom prefilter
+      // anyway, and a silently wrong corpus costs more.
+      state.foreach { st =>
+        val bounds = st.agg(
+          max(when(col("ver") < batchNo, col(id))),
+          min(when(col("ver") > batchNo, col(id)))).head()
+        val bRange = qualified.agg(min(col(id)), max(col(id))).head()
+        if (!bRange.isNullAt(0)) {
+          val (minB, maxB) = (bRange.getLong(0), bRange.getLong(1))
+          def fail(detail: String): Nothing =
+            throw new IllegalArgumentException(
+              s"out-of-order batch: batchNo=$batchNo $detail — the " +
+                "ascending-id convergence contract is violated and the " +
+                "incremental fold would silently diverge from the " +
+                "from-scratch rebuild; re-deliver batches in id order " +
+                "(a REPLAY of an already-folded batchNo with its " +
+                "original ids is allowed and idempotent)")
+          if (!bounds.isNullAt(0) && minB <= bounds.getLong(0))
+            fail(s"carries id $minB <= max id ${bounds.getLong(0)} of " +
+              "earlier-version state")
+          if (!bounds.isNullAt(1) && maxB >= bounds.getLong(1))
+            fail(s"carries id $maxB >= min id ${bounds.getLong(1)} of " +
+              "later-version state (a reused batchNo must carry its " +
+              "original ids, not new data)")
+        }
       }
-    ParquetMerge.upsertPartitions(spark, stateDir, rows, "part", id, "ver")
-    if (retractable) {
+      // cross-batch exact dedup: a batch text already present in state
+      // (survivor OR tombstone — both predate the batch and hold the
+      // smaller id) is dropped; first-id-wins settles intra-batch copies
+      val newb = state match {
+        case None => qualified
+        case Some(st) =>
+          // r15: pass the sketch capacity explicitly — parquet count() is
+          // a metadata-only job, while BloomGuard's own fallback count
+          // re-scans state WITH the normalize expression evaluated. Row
+          // count over-estimates the distinct-normal key count, which
+          // only lowers the realized fpp (capacity-independent
+          // correctness is BloomGuard's documented contract).
+          BloomGuard.newDocs(qualified, st.select(col(text)), text,
+            expectedItems = st.count())
+      }
+      val dedupedB = TextDedup.exactNormalized(newb, text, id)
+        .drop("text_hash")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // near-dup losers: new vs ALL state rows (tombstones included —
+      // the convergence clause), plus pairs within the batch itself.
+      // Indexed mode probes the stored posting table; plain mode
+      // re-shingles the state text. Retractable mode excludes the
+      // stored EXACT-dup rows from the probe — the one-shot pairs docs
+      // among the exact-deduped set only, and an exact loser's RAW text
+      // (which shingling sees) can differ from its keeper's.
+      // r15: shingle the deduped batch ONCE — the intra-pair pass, the
+      // plain-mode cross probe, and the indexed posting fold all consume
+      // the same exploded (doc, sh) table instead of re-tokenizing the
+      // batch per kernel
+      val shB = TextDedup.docShingles(dedupedB, text, id, n = 3)
+        .select(col("doc"), explode(col("sh")).as("sh"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val crossPairs = state match {
+        case None => None
+        case Some(st) if indexed =>
+          Some(TextDedup.crossNearDupsHashed(dedupedB,
+            spark.read.parquet(stateDir + PostingsSuffix)
+              .select(col("doc"), col("shc")),
+            spark.read.parquet(stateDir + DfSuffix)
+              .select(col("shc"), col("sh"), col("df_delta")),
+            text, id, shingleN = 3, threshold = jaccardThreshold,
+            maxPostings = maxPostings)
+            .select(col("id_old").as("id_a"), col("id_new").as("id_b")))
+        case Some(st) =>
+          val probeSide =
+            if (retractable) st.filter(col("in_deduped")) else st
+          Some(TextDedup.crossNearDupsFromNewShingles(
+            shB.select(col("doc").as("id_new"), col("sh")),
+            probeSide, text, id,
+            shingleN = 3, threshold = jaccardThreshold,
+            maxPostings = maxPostings)
+            .select(col("id_old").as("id_a"), col("id_new").as("id_b")))
+      }
+      val intraPairs = TextDedup.ngramJaccardPairsFromShingles(shB,
+        threshold = jaccardThreshold, maxPostings = maxPostings)
+        .select(col("id_a"), col("id_b"))
+      val pairs0 = crossPairs.fold(intraPairs)(_.unionByName(intraPairs))
+      // retractable mode writes the edge table AFTER the state upsert
+      // has overwritten the very files the cross probe reads — pin the
+      // pair set NOW (eager local checkpoint; it is O(batch pairs)) or
+      // the second action would re-probe the mutated state and record
+      // the batch's docs as their own near-dup pairs
+      val pairs =
+        if (retractable) pairs0.localCheckpoint(true) else pairs0
+      val losers = pairs.select(col("id_b").as(id)).distinct()
+      val keptRows = dedupedB
+        .join(losers.withColumn("_lost", lit(true)), Seq(id), "left")
+        .withColumn("is_survivor", coalesce(col("_lost"), lit(false)) === false)
+        .drop("_lost")
+      val payload = Seq(text, "n_words", "quality_score", "is_survivor")
+      val rows =
+        if (!retractable) StateFold.stamp(keptRows, idPart(col(id)), col(id),
+          batchNo, payload: _*)
+        else {
+          // exact-dup losers of THIS batch: qualified rows that did not
+          // reach the deduped set (dropped cross-batch by the bloom
+          // guard or intra-batch by first-id-wins). Stored so [[retract]]
+          // can promote a group's next member when its keeper leaves.
+          val exactLosers = qualified
+            .join(dedupedB.select(col(id)), Seq(id), "left_anti")
+            .withColumn("is_survivor", lit(false))
+            .withColumn("in_deduped", lit(false))
+          StateFold.stamp(keptRows.withColumn("in_deduped", lit(true))
+              .unionByName(exactLosers)
+              .withColumn("text_hash",
+                TextDedup.normalizedHash(col(text), col(id))),
+            idPart(col(id)), col(id), batchNo,
+            payload ++ Seq("in_deduped", "text_hash"): _*)
+        }
+      StateFold.upsert(spark, stateDir, rows, key = id)
       // append this batch's pair edges (complete by induction: every
       // pair among deduped docs is discovered exactly once, when its
-      // higher member's batch folds); pk = id_a:id_b so a replayed
-      // batch LWW-rewrites its own identical edges
-      val edgeRows = pairs
-        .withColumn("part", pmod(col("id_b"), lit(StateParts.toLong)))
-        .withColumn("pk", concat_ws(":", col("id_a"), col("id_b")))
-        .withColumn("ver", lit(batchNo))
-        .select("part", "pk", "ver", "id_a", "id_b")
-      ParquetMerge.upsertPartitions(spark, stateDir + EdgesSuffix,
-        edgeRows, "part", "pk", "ver")
-    }
-    if (indexed) {
-      // fold the batch's shingles into the posting table through the
-      // same idempotent LWW partition merge; tombstoned docs' shingles
-      // are included on purpose — future batches must probe them, the
-      // same convergence clause the state tombstones serve
-      // postings store the 8-byte xxhash64 code, NOT the shingle
-      // string (~3× smaller IO on the probe's dominant read); the df
-      // SUMMARY keeps one string per distinct shingle so the probe
-      // can audit code injectivity — see
-      // [[graft.ext.TextDedup.crossNearDupsHashed]]
-      // r15: derives from the shared batch-shingle table (shB above)
-      val shBatch = shB
-        .withColumn("shc", xxhash64(col("sh")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val shRows = shBatch
-        .withColumn("part", pmod(col("doc"), lit(StateParts.toLong)))
-        .withColumn("pk", concat_ws(":", col("doc"), col("shc")))
-        .withColumn("ver", lit(batchNo))
-        .select(col("part"), col("pk"), col("ver"), col("doc"), col("shc"))
-      ParquetMerge.upsertPartitions(spark, stateDir + PostingsSuffix,
-        shRows, "part", "pk", "ver")
-      // the fold-side half of the code-injectivity INVARIANT
-      // (crossNearDupsHashed class doc): the batch's distinct shingles
-      // must be internally injective before their (code, string) rows
-      // enter the summary. The batch-vs-CORPUS half is proved by the
-      // crossLosers probe above whenever state exists (it fails loudly
-      // on a cross clash before this append runs); on the very first
-      // fold there is no corpus to clash with. Together, by induction,
-      // a summary maintained only through this fold can never hold two
-      // strings for one code — which is what lets every subsequent
-      // probe skip the O(distinct-shingle-strings) corpus audit.
-      val dup = shBatch.select("sh", "shc").distinct()
-        .groupBy("shc").agg(count(lit(1)).as("_n"))
-        .filter(col("_n") > 1).limit(1).collect()
-      require(dup.isEmpty,
-        s"xxhash64 shingle-code collision within batch $batchNo (code " +
-          s"${if (dup.isEmpty) "" else dup.head.getLong(0)}): the " +
-          "hashed posting index would miscount intersections — this " +
-          "regime needs 128-bit codes")
-      // this batch's df contribution, keyed shc:ver → replay rewrites
-      // its own rows instead of double-counting
-      val dfRows = shBatch.groupBy("sh", "shc")
-        .agg(count(lit(1)).as("df_delta"))
-        .withColumn("part", pmod(col("shc"), lit(StateParts.toLong)))
-        .withColumn("pk", concat_ws(":", col("shc"), lit(batchNo)))
-        .withColumn("ver", lit(batchNo))
-        .select(col("part"), col("pk"), col("ver"), col("shc"), col("sh"),
-          col("df_delta"))
-      ParquetMerge.upsertPartitions(spark, stateDir + DfSuffix,
-        dfRows, "part", "pk", "ver")
-      shBatch.unpersist()
-    }
-    shB.unpersist()
-    dedupedB.unpersist()
-    qualified.unpersist()
-    // exit-side bind: the first fold of a fresh root records its layout
-    graft.util.StateConf.bind(spark, stateDir, StateParts)
-  }
-
-  /** The streaming face of the same fold: each micro-batch of crawled
-    * docs runs [[curateBatch]] via foreachBatch (batchId becomes the
-    * merge version, so a replayed micro-batch — foreachBatch's
-    * at-least-once contract — re-merges idempotently: checkpoint + the
-    * LWW merge = effective exactly-once, the [[graft.streaming.EventStream.mergeStream]]
-    * pattern). The convergence contract is inherited unchanged: after
-    * any prefix of micro-batches, survivors == the from-scratch
-    * rebuild over the documents ingested so far, provided micro-batch
-    * arrival follows the ascending-id contract — which the fold now
-    * ENFORCES: a micro-batch with a smaller id than the folded state
-    * (other than an at-least-once replay of an already-folded batchId,
-    * which re-merges idempotently) fails the stream loudly rather than
-    * silently drifting from the rebuild. The replay exemption is
-    * VERSION-SCOPED: a stream restarted against a FRESH checkpoint
-    * renumbers foreachBatch ids from 0, and a reused batchId carrying
-    * NEW data (ids outside the slot that version folded originally)
-    * also fails loudly instead of folding out of order. Sources that
-    * cannot guarantee id-ordered delivery must buffer/sort upstream of
-    * this sink.
-    */
-  def curateStream(docs: DataFrame, stateDir: String, text: String,
-                   id: String, checkpoint: String,
-                   minQuality: Double = 0.7,
-                   jaccardThreshold: Double = 0.3,
-                   maxPostings: Long = 5000,
-                   indexed: Boolean = false)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch {
-        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          fold(b.sparkSession, stateDir, b.toDF(), text, id,
-            batchNo = batchId, minQuality = minQuality,
-            jaccardThreshold = jaccardThreshold, maxPostings = maxPostings,
-            indexed = indexed)
+      // higher member's batch folds); pk = id_a:id_b so a replayed batch
+      // LWW-rewrites its own identical edges
+      if (retractable)
+        StateFold.upsert(spark, stateDir + EdgesSuffix,
+          edgeRows(pairs, batchNo))
+      if (indexed) {
+        // fold the batch's shingles into the posting table through the
+        // same idempotent LWW partition merge; tombstoned docs' shingles
+        // are included on purpose — future batches must probe them, the
+        // same convergence clause the state tombstones serve
+        // postings store the 8-byte xxhash64 code, NOT the shingle
+        // string (~3× smaller IO on the probe's dominant read); the df
+        // SUMMARY keeps one string per distinct shingle so the probe
+        // can audit code injectivity — see
+        // [[graft.ext.TextDedup.crossNearDupsHashed]]
+        // r15: derives from the shared batch-shingle table (shB above)
+        val shBatch = shB
+          .withColumn("shc", xxhash64(col("sh")))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        StateFold.upsert(spark, stateDir + PostingsSuffix,
+          postingRows(shBatch, batchNo))
+        // the fold-side half of the code-injectivity INVARIANT
+        // (crossNearDupsHashed class doc): the batch's distinct shingles
+        // must be internally injective before their (code, string) rows
+        // enter the summary. The batch-vs-CORPUS half is proved by the
+        // crossLosers probe above whenever state exists (it fails loudly
+        // on a cross clash before this append runs); on the very first
+        // fold there is no corpus to clash with. Together, by induction,
+        // a summary maintained only through this fold can never hold two
+        // strings for one code — which is what lets every subsequent
+        // probe skip the O(distinct-shingle-strings) corpus audit.
+        val dup = shBatch.select("sh", "shc").distinct()
+          .groupBy("shc").agg(count(lit(1)).as("_n"))
+          .filter(col("_n") > 1).limit(1).collect()
+        require(dup.isEmpty,
+          s"xxhash64 shingle-code collision within batch $batchNo (code " +
+            s"${if (dup.isEmpty) "" else dup.head.getLong(0)}): the " +
+            "hashed posting index would miscount intersections — this " +
+            "regime needs 128-bit codes")
+        // this batch's df contribution, keyed shc:ver → replay rewrites
+        // its own rows instead of double-counting
+        StateFold.upsert(spark, stateDir + DfSuffix, dfRows(
+          shBatch.groupBy("sh", "shc").agg(count(lit(1)).as("df_delta")),
+          concat_ws(":", col("shc"), lit(batchNo)), batchNo))
+        shBatch.unpersist()
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      shB.unpersist()
+      dedupedB.unpersist()
+      qualified.unpersist()
+    }
+
+  /** A row's partition: id-hashed (state rows and postings). */
+  private def idPart(id: Column): Column = pmod(id, lit(StateParts.toLong))
+
+  /** Pair-edge rows, partitioned by the loser id. */
+  private def edgeRows(pairs: DataFrame, ver: Long): DataFrame =
+    StateFold.stamp(pairs, pmod(col("id_b"), lit(StateParts.toLong)),
+      concat_ws(":", col("id_a"), col("id_b")).as("pk"), ver, "id_a", "id_b")
+
+  /** `(doc, shc)` posting rows, partitioned by doc. */
+  private def postingRows(sh: DataFrame, ver: Long): DataFrame =
+    StateFold.stamp(sh, idPart(col("doc")),
+      concat_ws(":", col("doc"), col("shc")).as("pk"), ver, "doc", "shc")
+
+  /** `(shc, sh, df_delta)` df-summary rows, partitioned by code. */
+  private def dfRows(df: DataFrame, pk: Column, ver: Long): DataFrame =
+    StateFold.stamp(df, pmod(col("shc"), lit(StateParts.toLong)),
+      pk.as("pk"), ver, "shc", "sh", "df_delta")
 
   /** The curated corpus as of the last folded batch: survivors only,
     * in the from-scratch output contract (id, n_words, quality_score).
@@ -581,10 +534,9 @@ object IncrementalCuration {
     }).localCheckpoint(true)
     // 3. fate recompute from the surviving edge graph
     val edgesDir = stateDir + EdgesSuffix
-    val hEdges = new org.apache.hadoop.fs.Path(edgesDir)
-    val fs = hEdges.getFileSystem(spark.sessionState.newHadoopConf())
+    val hasEdges = StateFold.exists(spark, edgesDir)
     val oldEdges =
-      if (fs.exists(hEdges))
+      if (hasEdges)
         spark.read.parquet(edgesDir).select("id_a", "id_b").persist(lvl)
       else newEdges.limit(0).select("id_a", "id_b")
     val liveOld = oldEdges
@@ -612,37 +564,28 @@ object IncrementalCuration {
     val wm = st.agg(max("ver")).head().getLong(0)
     ParquetMerge.deleteAndUpsertPartitions(spark, stateDir,
       removed.select(col("part"), col(id)), updates, "part", id, "ver")
-    val edgeGone = oldEdges
+    val edgeGone = edgeRows(oldEdges
       .join(liveOld.select("id_a", "id_b"), Seq("id_a", "id_b"),
-        "left_anti")
-      .select(pmod(col("id_b"), lit(StateParts.toLong)).as("part"),
-        concat_ws(":", col("id_a"), col("id_b")).as("pk"))
-    val edgeNew = newEdges
-      .withColumn("part", pmod(col("id_b"), lit(StateParts.toLong)))
-      .withColumn("pk", concat_ws(":", col("id_a"), col("id_b")))
-      .withColumn("ver", lit(wm))
-      .select("part", "pk", "ver", "id_a", "id_b")
-    if (fs.exists(hEdges))
+        "left_anti"), wm).select("part", "pk")
+    val edgeNew = edgeRows(newEdges, wm)
+    if (hasEdges)
       ParquetMerge.deleteAndUpsertPartitions(spark, edgesDir,
         edgeGone, edgeNew, "part", "pk", "ver")
     else if (!edgeNew.isEmpty)
-      ParquetMerge.upsertPartitions(spark, edgesDir, edgeNew,
-        "part", "pk", "ver")
+      StateFold.upsert(spark, edgesDir, edgeNew)
     // 5. indexed states: carry the posting + df-summary tables through
     // the delete, so post-retraction folds prune against exactly the
     // df the rebuild-without-X computes
     val postDir = stateDir + PostingsSuffix
-    if (fs.exists(new org.apache.hadoop.fs.Path(postDir))) {
+    if (StateFold.exists(spark, postDir)) {
       val dfDir = stateDir + DfSuffix
       // removed DEDUPED docs are the only ones indexed; their posting
       // rows (and the per-shingle doc counts to subtract) come from
       // the table itself — no re-shingling of removed text
-      val removedDedupIds = removed.filter(col("in_deduped"))
-        .select(col(id).as("doc")).localCheckpoint(true)
-      val remPost = spark.read.parquet(postDir)
-        .join(removedDedupIds, Seq("doc"), "left_semi")
-        .select("part", "pk", "doc", "shc")
-        .localCheckpoint(true)
+      val remPost = StateFold.locate(spark.read.parquet(postDir),
+        removed.filter(col("in_deduped")).select(col(id).as("doc"))
+          .localCheckpoint(true),
+        Seq("part", "pk", "doc", "shc")).get
       val remCnt = remPost.groupBy("shc")
         .agg(count(lit(1)).as("_rm"))
       // promoted docs join the deduped set: index their shingles (the
@@ -665,13 +608,9 @@ object IncrementalCuration {
         "xxhash64 shingle-code collision on promoted docs during " +
           "retraction — the hashed posting index would miscount; " +
           "this regime needs 128-bit codes")
-      val promPost = promSh
-        .withColumn("part", pmod(col("doc"), lit(StateParts.toLong)))
-        .withColumn("pk", concat_ws(":", col("doc"), col("shc")))
-        .withColumn("ver", lit(wm))
-        .select("part", "pk", "ver", "doc", "shc")
       ParquetMerge.deleteAndUpsertPartitions(spark, postDir,
-        remPost.select("part", "pk"), promPost, "part", "pk", "ver")
+        remPost.select("part", "pk"), postingRows(promSh, wm),
+        "part", "pk", "ver")
       // df consolidation: every shingle touched by the delete or the
       // promotion collapses to ONE corrected-total row (pk = shc:r —
       // disjoint from the folds' numeric shc:batchNo keys, so a later
@@ -686,7 +625,7 @@ object IncrementalCuration {
         .localCheckpoint(true)
       val oldTotals = dfAff.groupBy("shc")
         .agg(sum("df_delta").as("_old"), first("sh").as("_osh"))
-      val consolidated = affected
+      val consolidated = dfRows(affected
         .join(oldTotals, Seq("shc"), "left")
         .join(remCnt, Seq("shc"), "left")
         .join(promCnt, Seq("shc"), "left")
@@ -694,11 +633,8 @@ object IncrementalCuration {
           coalesce(col("_old"), lit(0L)) - coalesce(col("_rm"), lit(0L))
             + coalesce(col("_add"), lit(0L)))
         .filter(col("df_delta") > 0L)
-        .withColumn("sh", coalesce(col("_osh"), col("_psh")))
-        .withColumn("part", pmod(col("shc"), lit(StateParts.toLong)))
-        .withColumn("pk", concat(col("shc"), lit(":r")))
-        .withColumn("ver", lit(wm))
-        .select("part", "pk", "ver", "shc", "sh", "df_delta")
+        .withColumn("sh", coalesce(col("_osh"), col("_psh"))),
+        concat(col("shc"), lit(":r")), wm)
       ParquetMerge.deleteAndUpsertPartitions(spark, dfDir,
         dfAff.select("part", "pk"), consolidated, "part", "pk", "ver")
     }

@@ -7,6 +7,7 @@ import graft.ext.{IncrementalAnn, IncrementalBm25, IncrementalClusters,
   IncrementalSemDedup, IncrementalSimhash, IncrementalSketch,
   IncrementalStats, IncrementalWinnow}
 import graft.sink.ParquetMerge
+import graft.util.StateFold
 
 /** The composite NIGHTLY fold — the orchestration layer that makes the
   * incremental family one job instead of eleven: a crawl batch goes
@@ -39,7 +40,7 @@ import graft.sink.ParquetMerge
   * set-semantic sample union, self-loop contraction). A crash between
   * sub-folds resumes by replaying the batch: completed sub-folds
   * no-op, missing ones fold — the same effective-exactly-once story
-  * as the streaming faces.
+  * as the streaming face ([[graft.util.StateFold.stream]]).
   *
   * MAINTENANCE is part of the nightly, not a separate job: after the
   * sub-folds, every partitioned state table runs a small-file
@@ -72,22 +73,77 @@ object IncrementalPipeline {
                                  compaction: Seq[ParquetMerge.CompactionReport]
                                  = Seq.empty)
 
-  private def exists(spark: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sessionState.newHadoopConf()).exists(hp)
+  /** One maintained index of a composite: its directory, its
+    * partitioned state tables (the compaction worklist), its fold of
+    * admitted rows at a version, and its removal at a version of the
+    * docs that left admission, given as their ids and as their rows —
+    * None for an index a retraction rebuilds instead. A retraction
+    * runs every removal, then folds the newly admitted rows into the
+    * same indexes. (Id-keyed removals take the one-column id frame:
+    * their locate joins it, and the wider rows frame would size the
+    * join past a broadcast.)
+    */
+  private final case class Index(
+      dir: String, tables: Seq[String], fold: (DataFrame, Long) => Unit,
+      remove: Option[(DataFrame, DataFrame, Long) => Unit])
+
+  /** The text composite's indexes over the admitted docs, in fold
+    * order. Rows carry `id`, `text` and the docmeta columns. */
+  private def textIndexes(spark: SparkSession, root: String, text: String,
+                          id: String, sampleK: Int,
+                          dsirTargetLang: String): Seq[Index] = {
+    val Seq(bm25, minhash, simhash, winnow, cms, stats, sample, dsir) =
+      Seq("bm25", "minhash", "simhash", "winnow", "cms", "stats", "sample",
+        "dsir").map(t => s"$root/$t")
+    val target = col("lang") === dsirTargetLang
+    Seq(
+      Index(bm25, Seq(bm25, bm25 + IncrementalBm25.StatsSuffix),
+        (d, v) => IncrementalBm25.fold(spark, bm25, d, text, id, v),
+        Some((x, _, v) => IncrementalBm25.retractDocs(spark, bm25, x, id, v))),
+      Index(minhash, Seq(minhash),
+        (d, v) => IncrementalMinhash.fold(spark, minhash, d, text, id, v),
+        Some((x, _, _) =>
+          IncrementalMinhash.retractDocs(spark, minhash, x, id))),
+      Index(simhash, Seq(simhash),
+        (d, v) => IncrementalSimhash.fold(spark, simhash, d, text, id, v),
+        Some((x, _, _) =>
+          IncrementalSimhash.retractDocs(spark, simhash, x, id))),
+      Index(winnow, Seq(winnow),
+        (d, v) => IncrementalWinnow.fold(spark, winnow, d, text, id, v),
+        Some((x, _, _) => IncrementalWinnow.retractDocs(spark, winnow, x, id))),
+      Index(cms, Seq(cms, cms + IncrementalSketch.VocabSuffix),
+        (d, v) => IncrementalSketch.cmsFold(spark, cms, d, text, v),
+        Some((_, d, v) =>
+          IncrementalSketch.cmsRetract(spark, cms, d, text, v))),
+      Index(cms, Seq(cms + IncrementalSketch.GridSuffix),
+        (d, v) => IncrementalSketch.gridFold(spark, cms, d, "n_chars",
+          "source", v),
+        Some((_, d, v) => IncrementalSketch.gridRetract(spark, cms, d,
+          "n_chars", "source", v))),
+      Index(stats, Seq(stats),
+        (d, v) => IncrementalStats.fold(spark, stats, d, text, "source", v),
+        Some((_, d, v) => IncrementalStats.retractFold(spark, stats, d, text,
+          "source", v))),
+      // a bottom-k sketch is not subtractive: retraction rebuilds it
+      Index(sample, Nil,
+        (d, _) => IncrementalSample.fold(spark, sample, d, "lang", id,
+          sampleK), None),
+      // the DSIR selection model: raw counts from every admitted doc,
+      // target counts from the target-language slice — the importance
+      // scorer stays current with the corpus the nightly curates
+      Index(dsir, Seq(dsir),
+        (d, v) => IncrementalDsir.fold(spark, dsir, d, text, id, target, v),
+        Some((_, d, v) => IncrementalDsir.retractDocs(spark, dsir, d, text, id,
+          target, v))))
   }
 
   /** The partitioned state tables a text nightly maintains under
     * `root` — the compaction sweep's worklist. */
-  private def textTables(root: String): Seq[String] = {
+  private def textTables(root: String, ix: Seq[Index]): Seq[String] = {
     val cur = s"$root/curation"
-    Seq(cur, cur + IncrementalCuration.EdgesSuffix, s"$root/docmeta",
-      s"$root/bm25", s"$root/bm25" + IncrementalBm25.StatsSuffix,
-      s"$root/minhash", s"$root/simhash", s"$root/winnow",
-      s"$root/cc", s"$root/cc" + IncrementalClusters.RedirectSuffix,
-      s"$root/cms", s"$root/cms" + IncrementalSketch.VocabSuffix,
-      s"$root/cms" + IncrementalSketch.GridSuffix, s"$root/stats",
-      s"$root/dsir")
+    Seq(cur, cur + IncrementalCuration.EdgesSuffix, s"$root/docmeta") ++
+      ix.flatMap(_.tables) ++
+      Seq(s"$root/cc", s"$root/cc" + IncrementalClusters.RedirectSuffix)
   }
 
   /** The in-nightly maintenance sweep — EAGER by design (`minFiles =
@@ -119,12 +175,7 @@ object IncrementalPipeline {
               minQuality: Double = 0.7, jaccardThreshold: Double = 0.3,
               sampleK: Int = 40, compact: Boolean = true,
               dsirTargetLang: String = "en"): NightlyReport = {
-    val dirs = Map(
-      "curation" -> s"$root/curation", "bm25" -> s"$root/bm25",
-      "minhash" -> s"$root/minhash", "simhash" -> s"$root/simhash",
-      "winnow" -> s"$root/winnow", "cc" -> s"$root/cc",
-      "cms" -> s"$root/cms", "stats" -> s"$root/stats",
-      "sample" -> s"$root/sample", "dsir" -> s"$root/dsir")
+    val cur = s"$root/curation"
     val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nBatch = b.count()
     // an empty crawl night is a semantic no-op for every fold (the
@@ -140,96 +191,45 @@ object IncrementalPipeline {
     // (lang, source, n_chars) — what the sample REBUILD and the
     // retraction-time negative folds need without re-crawling (text
     // itself lives in the curation state).
-    IncrementalCuration.curateBatchRetractable(spark, dirs("curation"), b,
+    IncrementalCuration.curateBatchRetractable(spark, cur, b,
       text, id, batchNo, minQuality = minQuality,
       jaccardThreshold = jaccardThreshold)
-    val metaRows = b
+    val withMeta = (d: DataFrame) => d
       .withColumn("lang",
         if (b.columns.contains("lang")) col("lang") else lit("und"))
       .withColumn("source",
         if (b.columns.contains("source")) col("source") else lit("crawl"))
       .withColumn("n_chars", length(col(text)).cast("long"))
-      .withColumn("part", pmod(col(id), lit(8L)))
-      .withColumn("ver", lit(batchNo))
-      .select(col("part"), col(id), col("ver"), col("lang"),
-        col("source"), col("n_chars"))
-    graft.sink.ParquetMerge.upsertPartitions(spark, s"$root/docmeta",
-      metaRows, "part", id, "ver")
+    StateFold.upsert(spark, s"$root/docmeta", StateFold.stamp(withMeta(b),
+      pmod(col(id), lit(8L)), col(id), batchNo, "lang", "source", "n_chars"),
+      key = id)
     // the docs THIS batch admitted: survivor rows at this version
     // (keep-first means they are final; see the class doc)
-    val admittedIds = spark.read.parquet(dirs("curation"))
+    val admittedIds = spark.read.parquet(cur)
       .filter(col("is_survivor") && col("ver") === batchNo)
       .select(col(id))
-    val admitted = b.join(admittedIds, Seq(id), "left_semi")
-      .withColumn("lang",
-        if (b.columns.contains("lang")) col("lang") else lit("und"))
-      .withColumn("source",
-        if (b.columns.contains("source")) col("source") else lit("crawl"))
-      .withColumn("n_chars", length(col(text)).cast("long"))
+    val admitted = withMeta(b.join(admittedIds, Seq(id), "left_semi"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nAdmitted = admitted.count()
-    if (nAdmitted > 0L) {
-      IncrementalBm25.fold(spark, dirs("bm25"), admitted, text, id, batchNo)
-      IncrementalMinhash.fold(spark, dirs("minhash"), admitted, text, id,
-        batchNo)
-      IncrementalSimhash.fold(spark, dirs("simhash"), admitted, text, id,
-        batchNo)
-      IncrementalWinnow.fold(spark, dirs("winnow"), admitted, text, id,
-        batchNo)
-      IncrementalSketch.cmsFold(spark, dirs("cms"), admitted, text, batchNo)
-      IncrementalSketch.gridFold(spark, dirs("cms"), admitted, "n_chars",
-        "source", batchNo)
-      IncrementalStats.fold(spark, dirs("stats"), admitted, text, "source",
-        batchNo)
-      IncrementalSample.fold(spark, dirs("sample"), admitted, "lang", id,
-        sampleK)
-      // the DSIR selection model: raw counts from every admitted doc,
-      // target counts from the target-language slice — the importance
-      // scorer stays current with the corpus the nightly curates
-      IncrementalDsir.fold(spark, dirs("dsir"), admitted, text, id,
-        col("lang") === dsirTargetLang, batchNo)
-    }
+    val ix = textIndexes(spark, root, text, id, sampleK, dsirTargetLang)
+    if (nAdmitted > 0L) ix.foreach(_.fold(admitted, batchNo))
     // the CC labeling folds THIS batch's pair edges (the curation fold
     // just wrote them at ver = batchNo) — outside the admitted guard:
     // a night where every batch doc lost still produced edges, and
     // those edges are exactly what the labeling must learn. A replay
     // re-reads the identical LWW-rewritten edges and contracts to
     // self-loops (no-op).
-    val edgesDir = dirs("curation") + IncrementalCuration.EdgesSuffix
-    if (exists(spark, edgesDir)) {
+    val edgesDir = cur + IncrementalCuration.EdgesSuffix
+    if (StateFold.exists(spark, edgesDir)) {
       val batchEdges = spark.read.parquet(edgesDir)
         .filter(col("ver") === batchNo).select("id_a", "id_b")
-      IncrementalClusters.fold(spark, dirs("cc"), batchEdges, batchNo)
+      IncrementalClusters.fold(spark, s"$root/cc", batchEdges, batchNo)
     }
     admitted.unpersist(); b.unpersist()
     val reports =
-      if (compact) compactSweep(spark, textTables(root)) else Seq.empty
+      if (compact) compactSweep(spark, textTables(root, ix)) else Seq.empty
     NightlyReport(batchNo, nBatch, nAdmitted, reports)
   }
-
-  /** Streaming face: each micro-batch runs the whole nightly fold at
-    * version batchId + 1 (checkpoint + per-fold idempotence =
-    * effective exactly-once across the composite).
-    */
-  def nightlyStream(docs: DataFrame, root: String, text: String,
-                    id: String, checkpoint: String,
-                    minQuality: Double = 0.7,
-                    jaccardThreshold: Double = 0.3, sampleK: Int = 40)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch {
-        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          if (!b.isEmpty) {
-            nightly(b.sparkSession, root, b.toDF(), text, id,
-              batchNo = batchId + 1L, minQuality = minQuality,
-              jaccardThreshold = jaccardThreshold, sampleK = sampleK)
-            ()
-          }
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
 
   /** RETRACT a doc set through EVERY maintained artifact — one delete
     * call propagates the right-to-be-forgotten request end to end,
@@ -283,12 +283,9 @@ object IncrementalPipeline {
     // and every PRIOR retraction version (pinned as the curation
     // watermark below) — reusing one would LWW-collide the negative
     // stats deltas of two different retractions
-    val rwmP = new org.apache.hadoop.fs.Path(
-      cur + IncrementalCuration.RetractWmSuffix)
-    if (rwmP.getFileSystem(spark.sessionState.newHadoopConf())
-      .exists(rwmP)) {
-      val rwm = spark.read
-        .parquet(cur + IncrementalCuration.RetractWmSuffix)
+    val rwmDir = cur + IncrementalCuration.RetractWmSuffix
+    if (StateFold.exists(spark, rwmDir)) {
+      val rwm = spark.read.parquet(rwmDir)
         .agg(max("wm")).head().getLong(0)
       require(retractVer > rwm,
         s"retractVer $retractVer must exceed the prior retraction " +
@@ -308,7 +305,7 @@ object IncrementalPipeline {
     val emptyEdges = spark.range(0)
       .select(col("id").as("id_a"), col("id").as("id_b"))
     val liveOld: DataFrame =
-      if (exists(spark, edgesDir))
+      if (StateFold.exists(spark, edgesDir))
         spark.read.parquet(edgesDir).select("id_a", "id_b")
           .join(x.withColumnRenamed(id, "id_a"), Seq("id_a"), "left_anti")
           .join(x.withColumnRenamed(id, "id_b"), Seq("id_b"), "left_anti")
@@ -337,66 +334,33 @@ object IncrementalPipeline {
     val additionDocs = stAfter.select(col(id), col(text))
       .join(additions, Seq(id), "left_semi")
       .localCheckpoint(true)
-    // docmeta loses the retracted rows (thin table, key-partitioned)
     val metaDir = s"$root/docmeta"
     val meta = spark.read.parquet(metaDir)
-    val metaGone = meta.join(x, Seq(id), "left_semi")
-      .select(col("part"), col(id)).localCheckpoint(true)
     val withMeta = (d: DataFrame) => d
       .join(meta.select(col(id), col("lang"), col("source"),
         col("n_chars")), Seq(id))
       .localCheckpoint(true)
     val remFull = withMeta(removalDocs)
     val addFull = withMeta(additionDocs)
-    graft.sink.ParquetMerge.deleteAndUpsertPartitions(spark, metaDir,
-      metaGone, meta.limit(0), "part", id, "ver")
-    if (!removals.isEmpty) {
-      IncrementalBm25.retractDocs(spark, s"$root/bm25", removals, id,
-        retractVer)
-      IncrementalMinhash.retractDocs(spark, s"$root/minhash", removals, id)
-      if (exists(spark, s"$root/simhash"))
-        IncrementalSimhash.retractDocs(spark, s"$root/simhash", removals, id)
-      if (exists(spark, s"$root/winnow"))
-        IncrementalWinnow.retractDocs(spark, s"$root/winnow", removals, id)
-      IncrementalSketch.cmsRetract(spark, s"$root/cms", remFull, text,
-        retractVer)
-      IncrementalSketch.gridRetract(spark, s"$root/cms", remFull,
-        "n_chars", "source", retractVer)
-      IncrementalStats.retractFold(spark, s"$root/stats", remFull, text,
-        "source", retractVer)
-      if (exists(spark, s"$root/dsir"))
-        IncrementalDsir.retractDocs(spark, s"$root/dsir", remFull, text,
-          id, col("lang") === dsirTargetLang, retractVer)
-    }
-    if (!additions.isEmpty) {
-      IncrementalBm25.fold(spark, s"$root/bm25", addFull, text, id,
-        retractVer)
-      IncrementalMinhash.fold(spark, s"$root/minhash", addFull, text, id,
-        retractVer)
-      IncrementalSimhash.fold(spark, s"$root/simhash", addFull, text, id,
-        retractVer)
-      IncrementalWinnow.fold(spark, s"$root/winnow", addFull, text, id,
-        retractVer)
-      IncrementalSketch.cmsFold(spark, s"$root/cms", addFull, text,
-        retractVer)
-      IncrementalSketch.gridFold(spark, s"$root/cms", addFull, "n_chars",
-        "source", retractVer)
-      IncrementalStats.fold(spark, s"$root/stats", addFull, text,
-        "source", retractVer)
-      if (exists(spark, s"$root/dsir"))
-        IncrementalDsir.fold(spark, s"$root/dsir", addFull, text, id,
-          col("lang") === dsirTargetLang, retractVer)
-    }
+    // docmeta loses the retracted rows (thin table, key-partitioned)
+    StateFold.locate(meta, x, Seq("part", id))
+      .foreach(StateFold.delete(spark, metaDir, meta, _, key = id))
+    val ix = textIndexes(spark, root, text, id, sampleK, dsirTargetLang)
+    val live =
+      ix.filter(i => i.remove.isDefined && StateFold.exists(spark, i.dir))
+    if (!removals.isEmpty)
+      live.foreach(_.remove.get(removals, remFull, retractVer))
+    if (!additions.isEmpty) live.foreach(_.fold(addFull, retractVer))
     // CC: remove the retracted nodes over the PINNED surviving-old
     // edge set (every removed edge lies inside an affected component —
     // its endpoints were connected), then fold the retraction's fresh
     // promotion edges; min-label composition makes the result the
     // one-shot contraction over the post-retraction edge table
     val ccDir = s"$root/cc"
-    if (exists(spark, ccDir)) {
+    if (StateFold.exists(spark, ccDir)) {
       IncrementalClusters.retract(spark, ccDir, x, liveOld)
       val newEdges: DataFrame =
-        if (exists(spark, edgesDir))
+        if (StateFold.exists(spark, edgesDir))
           spark.read.parquet(edgesDir).select("id_a", "id_b")
             .join(liveOld, Seq("id_a", "id_b"), "left_anti")
             .localCheckpoint(true)
@@ -416,7 +380,7 @@ object IncrementalPipeline {
     // and the NEXT two nights paid the read amplification (279 s /
     // 700 s vs a ~100 s steady night). The cleanup belongs in the
     // retraction's own accounting.
-    if (compact) { compactSweep(spark, textTables(root)); () }
+    if (compact) { compactSweep(spark, textTables(root, ix)); () }
     x.unpersist()
   }
 
@@ -431,12 +395,38 @@ object IncrementalPipeline {
                                       compaction: Seq[ParquetMerge.CompactionReport]
                                       = Seq.empty)
 
-  private def embedTables(root: String): Seq[String] =
-    Seq(s"$root/semdedup",
-      s"$root/semdedup" + IncrementalSemDedup.CellStatsSuffix,
-      s"$root/ivf", s"$root/ivf" + IncrementalAnn.AuditSuffix,
-      s"$root/pq", s"$root/lsh",
-      s"$root/lsh" + IncrementalLsh.VecsSuffix)
+  /** The embedding composite's indexes over the admitted vectors, in
+    * fold order. Version 0 is the init night: it trains and freezes
+    * the IVF centroids and PQ codebooks. Rows carry `id` and `vec`. */
+  private def embedIndexes(spark: SparkSession, root: String, id: String,
+                           vec: String, lshGeometry: => (Int, Int),
+                           nLists: Int = 16, m: Int = 8, kCent: Int = 16,
+                           seed: Long = 42L): Seq[Index] = {
+    val Seq(ivf, pq, lsh) = Seq("ivf", "pq", "lsh").map(t => s"$root/$t")
+    Seq(
+      Index(ivf, Seq(ivf, ivf + IncrementalAnn.AuditSuffix),
+        (d, v) =>
+          if (v == 0L) IncrementalAnn.ivfInit(spark, ivf, d, id, vec, nLists,
+            seed)
+          else IncrementalAnn.ivfFold(spark, ivf, d, id, vec, v),
+        Some((x, _, v) => IncrementalAnn.ivfRetract(spark, ivf, x, id, v))),
+      Index(pq, Seq(pq),
+        (d, v) =>
+          if (v == 0L) IncrementalAnn.pqInit(spark, pq, d, id, vec, m, kCent,
+            seed)
+          else IncrementalAnn.pqFold(spark, pq, d, id, vec, v),
+        // the PQ code table has the IVF assignment table's layout
+        Some((x, _, v) => IncrementalAnn.ivfRetract(spark, pq, x, id, v))),
+      // the LSH tier needs no training, so it folds every night
+      // including night 0 — geometry is frozen by its own config table
+      Index(lsh, Seq(lsh, lsh + IncrementalLsh.VecsSuffix),
+        (d, v) => {
+          val (bits, tables) = lshGeometry
+          IncrementalLsh.fold(spark, lsh, d, id, vec, v, bits = bits,
+            tables = tables)
+        },
+        Some((x, _, _) => IncrementalLsh.retract(spark, lsh, x, id))))
+  }
 
   /** The EMBEDDING-side nightly — the sibling composite for the vector
     * half of a training-data pipeline: a batch of embeddings goes
@@ -471,7 +461,6 @@ object IncrementalPipeline {
                    compact: Boolean = true): EmbedNightlyReport = {
     val sem = s"$root/semdedup"
     val ivf = s"$root/ivf"
-    val pq = s"$root/pq"
     val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nBatch = b.count()
     IncrementalSemDedup.fold(spark, sem, b, id, vec, batchNo,
@@ -483,24 +472,17 @@ object IncrementalPipeline {
       .select(col("vid").as(id), col("vec").as(vec))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nAdmitted = admitted.count()
-    val centExists = exists(spark, ivf + IncrementalAnn.CentroidsSuffix)
-    if (!centExists || batchNo == 0L) {
+    val ix = embedIndexes(spark, root, id, vec, (lshBits, lshTables),
+      nLists, m, kCent, seed)
+    if (batchNo == 0L ||
+      !StateFold.exists(spark, ivf + IncrementalAnn.CentroidsSuffix)) {
       require(batchNo == 0L,
         s"no trained quantizers at $ivf — the first embed night must " +
           s"run at batchNo 0 (the init night); got batchNo $batchNo")
       require(nAdmitted > 0L,
         "init night admitted no vectors — cannot train the quantizers")
-      IncrementalAnn.ivfInit(spark, ivf, admitted, id, vec, nLists, seed)
-      IncrementalAnn.pqInit(spark, pq, admitted, id, vec, m, kCent, seed)
-    } else if (nAdmitted > 0L) {
-      IncrementalAnn.ivfFold(spark, ivf, admitted, id, vec, batchNo)
-      IncrementalAnn.pqFold(spark, pq, admitted, id, vec, batchNo)
     }
-    // the LSH tier needs no training, so it folds every night
-    // including night 0 — geometry is frozen by its own config table
-    if (nAdmitted > 0L)
-      IncrementalLsh.fold(spark, s"$root/lsh", admitted, id, vec,
-        batchNo, bits = lshBits, tables = lshTables)
+    if (nAdmitted > 0L) ix.foreach(_.fold(admitted, batchNo))
     admitted.unpersist(); b.unpersist()
     // the night's drift signal: the latest FOLD audit row (negative
     // batch_no rows are retraction decrements, not fits)
@@ -508,37 +490,15 @@ object IncrementalPipeline {
       .filter(col("batch_no") >= 0L)
       .orderBy(desc("batch_no")).select("drift_ratio").limit(1).head()
     val reports =
-      if (compact) compactSweep(spark, embedTables(root)) else Seq.empty
+      if (compact) compactSweep(spark, embedTables(root, ix)) else Seq.empty
     EmbedNightlyReport(batchNo, nBatch, nAdmitted,
       driftRow.getDouble(0), reports)
   }
 
-  /** Streaming face of [[nightlyEmbed]]: micro-batch 0 is the init
-    * night (trains + freezes the quantizers), later micro-batches
-    * fold — checkpoint + per-fold idempotence (and the replay-safe
-    * inits) = effective exactly-once across the composite.
-    */
-  def nightlyEmbedStream(emb: DataFrame, root: String, id: String,
-                         vec: String, checkpoint: String,
-                         signBits: Int = 4, threshold: Double = 0.45,
-                         maxCell: Long = 100000L, nLists: Int = 16,
-                         m: Int = 8, kCent: Int = 16, seed: Long = 42L)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    emb.writeStream
-      .foreachBatch {
-        (mb: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          if (!mb.isEmpty) {
-            nightlyEmbed(mb.sparkSession, root, mb.toDF(), id, vec,
-              batchNo = batchId, signBits = signBits,
-              threshold = threshold, maxCell = maxCell, nLists = nLists,
-              m = m, kCent = kCent, seed = seed)
-            ()
-          }
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+  private def embedTables(root: String, ix: Seq[Index]): Seq[String] =
+    Seq(s"$root/semdedup",
+      s"$root/semdedup" + IncrementalSemDedup.CellStatsSuffix) ++
+      ix.flatMap(_.tables)
 
   /** RETRACT a vector set through the embedding-side composite:
     * [[IncrementalSemDedup.retract]] settles admission (vectors
@@ -576,33 +536,22 @@ object IncrementalPipeline {
       .select(col("vid").as(id)).localCheckpoint(true)
     val additions = after.join(before, Seq("vid"), "left_anti")
       .localCheckpoint(true)
-    if (!removals.isEmpty) {
-      IncrementalAnn.ivfRetract(spark, s"$root/ivf", removals, id,
-        retractVer)
-      IncrementalAnn.ivfRetract(spark, s"$root/pq", removals, id,
-        retractVer)
-      if (exists(spark, s"$root/lsh"))
-        IncrementalLsh.retract(spark, s"$root/lsh", removals, id)
-    }
+    val ix = embedIndexes(spark, root, id, vec,
+      IncrementalLsh.geometry(spark, s"$root/lsh"))
+    val live = ix.filter(i => StateFold.exists(spark, i.dir))
+    if (!removals.isEmpty)
+      live.foreach(_.remove.get(removals, removals, retractVer))
     if (!additions.isEmpty) {
       // resurrected vectors re-read from the SemDedup state (it keeps
       // every seen vector precisely for fate recomputes)
       val addVecs = stAfter.join(additions, Seq("vid"), "left_semi")
         .select(col("vid").as(id), col("vec").as(vec))
         .localCheckpoint(true)
-      IncrementalAnn.ivfFold(spark, s"$root/ivf", addVecs, id, vec,
-        retractVer)
-      IncrementalAnn.pqFold(spark, s"$root/pq", addVecs, id, vec,
-        retractVer)
-      if (exists(spark, s"$root/lsh")) {
-        val (gb, gt) = IncrementalLsh.geometry(spark, s"$root/lsh")
-        IncrementalLsh.fold(spark, s"$root/lsh", addVecs, id, vec,
-          retractVer, bits = gb, tables = gt)
-      }
+      live.foreach(_.fold(addVecs, retractVer))
     }
     // same post-retraction sweep rule as retractNightly: the delete's
     // per-(table, partition) delta files are this operation's cost,
     // not the next fold's
-    if (compact) { compactSweep(spark, embedTables(root)); () }
+    if (compact) { compactSweep(spark, embedTables(root, ix)); () }
   }
 }

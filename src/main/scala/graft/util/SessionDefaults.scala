@@ -22,9 +22,12 @@ object SessionDefaults {
     * janino recompilation per affected query per pass, and the
     * "session-crowding" inflation the sub-second multimodal lines had
     * shown since r12 disappeared with it (they were the eviction
-    * victims). STATIC conf: must be set at session build; entries are
-    * weak-ref'd compiled classes (~100 KB each), so even 4096 bounds
-    * at a few hundred MB of metaspace in the worst case.
+    * victims). STATIC conf: must be set at session build. The cache
+    * is a size-bounded LRU holding STRONG references to the compiled
+    * classes (~100 KB each): nothing is released under memory
+    * pressure, an entry leaves only when evicted past the bound — so
+    * the bound itself is the memory budget, and 4096 entries cost up
+    * to a few hundred MB of metaspace.
     */
   val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
 

@@ -64,6 +64,17 @@ class AnnPortableSpec extends SparkSpec {
     }
   }
 
+  test("compiled portable bucket rejects non-float inputs at analysis") {
+    val df = Seq((Seq(1, 2, 3), "x")).toDF("ints", "s")
+    for (c <- Seq("ints", "s")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        df.select(graft.functions.VectorExpressions
+          .portable_lsh_bucket(col(c), 8))
+      }
+      assert(e.getMessage.contains("portable_lsh_bucket requires"), c)
+    }
+  }
+
   test("compiled portable bucket is bit-identical to the HOF reference expression") {
     // r16: bucketExprOf(portable = true) runs the compiled kernel
     // (VectorExpressions.portable_lsh_bucket); the HOF SQL form

@@ -20,6 +20,18 @@ class BenchSpec extends SparkSpec {
       extraS = 30))
   }
 
+  test("SPARK_GRAFT_CPUS: * resolves to every processor; a non-numeric " +
+    "value fails loudly") {
+    assert(Bench.resolveCpus(None) == 4)
+    assert(Bench.resolveCpus(Some("8")) == 8)
+    assert(Bench.resolveCpus(Some("*")) ==
+      Runtime.getRuntime.availableProcessors())
+    val e = intercept[IllegalArgumentException] {
+      Bench.run(Map("SPARK_GRAFT_CPUS" -> "four").get, stopSession = false)
+    }
+    assert(e.getMessage.contains("SPARK_GRAFT_CPUS"))
+  }
+
   test("a budget-constrained run stops after one pass and still emits " +
     "a valid one-object artifact with the budget flagged") {
     val out = java.nio.file.Files.createTempFile("bench", ".json")

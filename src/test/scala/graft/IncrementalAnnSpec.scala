@@ -185,7 +185,8 @@ class IncrementalAnnSpec extends SparkSpec {
       val st = spark.readStream
         .schema("vec_id bigint, embedding array<float>")
         .option("maxFilesPerTrigger", "1").parquet(sroot + "/f*")
-      IncrementalAnn.ivfFoldStream(st, sDir, "vec_id", "embedding", ckp)
+      graft.util.StateFold.stream(st, ckp)((s, b, v) =>
+          IncrementalAnn.ivfFold(s, sDir, b, "vec_id", "embedding", v))
         .awaitTermination(180000)
     }
     runStream()

@@ -261,7 +261,8 @@ class IncrementalClustersSpec extends SparkSpec {
         .schema("id_a long, id_b long")
         .option("maxFilesPerTrigger", "1")
         .parquet(srcDir + "/*")
-      IncrementalClusters.foldStream(stream, dir, ckpt)
+      graft.util.StateFold.stream(stream, ckpt)((s, b, v) =>
+          IncrementalClusters.fold(s, dir, b, v))
         .awaitTermination(120000)
       val want = oneShot((1L, 2L), (4L, 5L), (2L, 4L), (7L, 8L))
       assert(lbl(dir) == want)

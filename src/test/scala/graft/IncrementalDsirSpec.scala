@@ -159,7 +159,8 @@ class IncrementalDsirSpec extends SparkSpec {
         .schema("doc_id long, text string, lang string")
         .option("maxFilesPerTrigger", "1")
         .parquet(srcDir + "/*")
-      IncrementalDsir.foldStream(stream, dir, "text", "doc_id", tgt, ckpt)
+      graft.util.StateFold.stream(stream, ckpt)((s, b, v) =>
+          IncrementalDsir.fold(s, dir, b, "text", "doc_id", tgt, v))
         .awaitTermination(120000)
       assert(modelSet(IncrementalDsir.modelProbe(spark, dir)) ==
         modelSet(Dsir.modelCounts(corpus, "text", "doc_id", tgt)))

@@ -108,8 +108,8 @@ class IncrementalLshSpec extends SparkSpec {
     val stream = spark.readStream.schema(all.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$root/src/*")
-    IncrementalLsh.foldStream(stream, dir, "vec_id", "embedding",
-        s"$root/ckpt")
+    graft.util.StateFold.stream(stream, s"$root/ckpt")((s, b, v) =>
+        IncrementalLsh.fold(s, dir, b, "vec_id", "embedding", v))
       .awaitTermination(300000)
     IncrementalLsh.fold(spark, batchDir, all, "vec_id", "embedding", 1L)
     def bucketTable(d: String) = spark.read.parquet(d)

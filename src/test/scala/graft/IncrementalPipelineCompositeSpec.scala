@@ -399,8 +399,11 @@ class IncrementalPipelineCompositeSpec extends SparkSpec {
         .schema(docs.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(srcDir + "/*")
-      IncrementalPipeline.nightlyStream(stream, s"$root/stream", "text",
-          "doc_id", s"$root/ckpt")
+      graft.util.StateFold.stream(stream, s"$root/ckpt") { (s, b, v) =>
+          IncrementalPipeline.nightly(s, s"$root/stream", b, "text",
+            "doc_id", v)
+          ()
+        }
         .awaitTermination(300000)
       IncrementalPipeline.nightly(spark, s"$root/batch",
         docs.filter(col("doc_id") <= 60), "text", "doc_id", 1L)

@@ -145,8 +145,9 @@ class IncrementalPipelineSpec extends SparkSpec {
     def runStream(): Unit = {
       val st = spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", "1").parquet(sdir + "/f*")
-      IncrementalCuration.curateStream(st, stDir, "text", "doc_id", ckp,
-        jaccardThreshold = 0.5).awaitTermination(180000)
+      graft.util.StateFold.stream(st, ckp)((s, b, v) =>
+        IncrementalCuration.curateBatch(s, stDir, b, "text", "doc_id", v,
+          jaccardThreshold = 0.5)).awaitTermination(180000)
     }
     runStream()
     def sSurv() = IncrementalCuration.survivors(spark, stDir)

@@ -84,7 +84,8 @@ class IncrementalSampleSpec extends SparkSpec {
         .schema("doc_id long, lang string")
         .option("maxFilesPerTrigger", "1")
         .parquet(srcDir + "/*")
-      IncrementalSample.foldStream(stream, dir, "lang", "doc_id", k = 2, ckpt)
+      graft.util.StateFold.stream(stream, ckpt)((s, b, _) =>
+          IncrementalSample.fold(s, dir, b, "lang", "doc_id", k = 2))
         .awaitTermination(120000)
       val want = Sampling.sampleExactK(
           Seq((1L, "en"), (2L, "en"), (3L, "en"), (4L, "en"), (5L, "de"))

@@ -202,7 +202,8 @@ class IncrementalSketchSpec extends SparkSpec {
         .schema("doc_id long, text string")
         .option("maxFilesPerTrigger", "1")
         .parquet(srcDir + "/*")
-      IncrementalSketch.cmsFoldStream(stream, dir, "text", ckpt)
+      graft.util.StateFold.stream(stream, ckpt)((s, b, v) =>
+          IncrementalSketch.cmsFold(s, dir, b, "text", v))
         .awaitTermination(120000)
       val want = Sketches.cmsTermCounts(
           Seq((1L, "x y"), (2L, "y z"), (3L, "x x q")).toDF("doc_id", "text"),

@@ -148,7 +148,8 @@ class IncrementalStatsSpec extends SparkSpec {
         .schema("doc_id long, source string, text string, n_chars long")
         .option("maxFilesPerTrigger", "1")
         .parquet(srcDir + "/*")
-      IncrementalStats.foldStream(stream, dir, "text", "source", ckpt)
+      graft.util.StateFold.stream(stream, ckpt)((s, b, v) =>
+          IncrementalStats.fold(s, dir, b, "text", "source", v))
         .awaitTermination(120000)
       assert(probe(dir) == Seq(("book", 1L, 3L, 5L, 3.0),
         ("web", 2L, 3L, 4L, 1.5)))

@@ -454,7 +454,8 @@ class MixOverlapSpec extends SparkSpec {
     def runStream(): Unit = {
       val st = spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", "1").parquet(sroot + "/f*")
-      IncrementalMinhash.foldStream(st, sDir, "text", "doc_id", ckp)
+      graft.util.StateFold.stream(st, ckp)((s, b, v) =>
+          IncrementalMinhash.fold(s, sDir, b, "text", "doc_id", v))
         .awaitTermination(180000)
     }
     runStream()
@@ -557,7 +558,8 @@ class MixOverlapSpec extends SparkSpec {
     def runStream(): Unit = {
       val st = spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", "1").parquet(sroot + "/f*")
-      IncrementalSimhash.foldStream(st, sDir, "text", "doc_id", ckp)
+      graft.util.StateFold.stream(st, ckp)((s, b, v) =>
+          IncrementalSimhash.fold(s, sDir, b, "text", "doc_id", v))
         .awaitTermination(180000)
     }
     runStream()

@@ -109,7 +109,8 @@ class RetrievalSpec extends SparkSpec {
     def runStream(): Unit = {
       val st = spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", "1").parquet(sroot + "/f*")
-      IncrementalBm25.foldStream(st, sDir, "text", "doc_id", ckp)
+      graft.util.StateFold.stream(st, ckp)((s, b, v) =>
+          IncrementalBm25.fold(s, sDir, b, "text", "doc_id", v))
         .awaitTermination(180000)
     }
     runStream()

@@ -211,8 +211,9 @@ class SemDedupSpec extends SparkSpec {
       .write.parquet(root + "/in/b2")
     val src = spark.readStream.schema(emb.schema)
       .option("maxFilesPerTrigger", "1").parquet(root + "/in/b*")
-    val q = graft.ext.IncrementalSemDedup.foldStream(src, root + "/state",
-      "vec_id", "embedding", checkpoint = root + "/ck")
+    val q = graft.util.StateFold.stream(src, root + "/ck")((s, b, v) =>
+      graft.ext.IncrementalSemDedup.fold(s, root + "/state", b, "vec_id",
+        "embedding", v))
     q.awaitTermination()
     val streamed = graft.ext.IncrementalSemDedup
       .survivors(spark, root + "/state", "vec_id")
